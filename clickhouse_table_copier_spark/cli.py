@@ -43,20 +43,10 @@ def _run(mode: str, config_path: str, explain: bool = False) -> int:
 
     register_clickhouse_functions(spark)
 
-    src = load_table(
-        spark,
-        TableRef(
-            location=job.source.location,
-            fmt=job.source.format,
-            table=job.source.table,
-            options=job.source.options,
-        ),
-    )
-    if job.destination.format not in ("parquet", "jdbc"):
-        raise ConfigError(
-            "sync destination must be a parquet path or a jdbc endpoint"
-        )
+    def ref(ep) -> TableRef:
+        return TableRef(location=ep.location, fmt=ep.format, table=ep.table, options=ep.options)
 
+    src = load_table(spark, ref(job.source))
     options = SyncOptions(
         check_hashes=job.check_hashes,
         skip_delete=job.skip_delete,
@@ -76,39 +66,19 @@ def _run(mode: str, config_path: str, explain: bool = False) -> int:
                 f"rows={r['rows']} fingerprint={r['fingerprint']}"
             )
 
-    if job.destination.format == "jdbc":
-        # the reference's native shape: remote-server destination
-        # (classify → one DELETE → one distributed INSERT)
-        from clickhouse_table_copier_spark.operators.sync_jdbc import sync_to_jdbc
-        from clickhouse_table_copier_spark.plans.casting import apply_semantic
-
-        if job.semantic_casts:
-            src = apply_semantic(src, job.semantic_casts)
-        result = sync_to_jdbc(
-            spark,
-            src,
-            TableRef(
-                location=job.destination.location,
-                fmt="jdbc",
-                table=job.destination.table,
-                options=job.destination.options,
-            ),
-            spec,
-            options,
-        )
-    else:
-        result = sync(
-            spark, src, job.destination.location, spec, options,
-            semantic=job.semantic_casts,
-        )
+    result = sync(spark, src, ref(job.destination), spec, options, semantic=job.semantic_casts)
     if explain:
         # the working version of the reference's dead --debug flag
         # (main.go:52, "doesnt work"): show the physical plan the engine
         # actually executes for the diff report
         result.report.explain("formatted")
     # The reference's Info() prints one classification line per partition
-    # (copy/copy.go:12-137); the report DataFrame is that output.
-    rows = result.report.orderBy(*spec.names).collect()
+    # (copy/copy.go:12-137); the report is that output. A sync has already
+    # collected it; only a dry run's report is still to be computed.
+    rows = sorted(
+        result.rows if result.rows is not None else result.report.collect(),
+        key=lambda r: [(r[n] is not None, r[n]) for n in spec.names],  # NULLs first
+    )
     for r in rows:
         print(
             "partition="

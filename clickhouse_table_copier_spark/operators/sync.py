@@ -1,41 +1,60 @@
 """The sync engine (SURVEY §2.7 D1-D2, §2.9 C5-C7): make dest match source.
 
 Reference algorithm (``/root/reference/copy/copy.go:139-271``): per source
-partition — probe dest count, compare fingerprints, then delete
+partition — probe the destination, compare fingerprints, then delete
 (``ALTER TABLE … DELETE``, database.go:463-484) and re-copy
 (``INSERT … SELECT … FROM remote(…)``, database.go:486-507) according to the
 ``skip_delete`` / ``skip_reimport`` / ``check_hashes`` flags
 (config/config.go:34-37).
 
-Spark-first formulation — three set-oriented steps instead of a
-per-partition loop:
+One pipeline serves both kinds of destination, a hive-partitioned parquet
+directory and a JDBC table:
 
-1. ``diff_partitions`` → verdict per partition (one grouped agg per side +
-   a tiny join; see operators.diff).
-2. ONE dynamic-partition-overwrite write of all partitions needing data
-   (``copy`` + ``inconsistent`` unless flags say otherwise). Dynamic
-   overwrite replaces exactly the partitions present in the written
-   DataFrame — the reference's delete-then-reinsert window becomes a single
-   atomic-per-partition step, strictly better (no moment where the
-   partition is empty).
-3. Optional directory deletes for the delete-only path
-   (``skip_reimport`` without ``skip_delete``).
+1. Probe whether the destination exists.
+2. Build the per-partition report. An absent destination makes every
+   source partition a ``copy``, counted from the source. Otherwise the
+   destination is loaded, its columns matched to the source's by name
+   (case-insensitively: Derby/Oracle fold identifiers to upper case), the
+   source cast to the destination's types, and ``diff_partitions``
+   classifies every partition in one grouped pass per side.
+3. Derive each partition's ``action`` from its verdict and the flags.
+4. A dry run returns that report uncollected — the reference's
+   Info()/Copy() split (copy/copy.go:12 vs :139).
+5. Otherwise the report is collected once, before anything is changed
+   (it lazily reads the destination about to be rewritten), and the key
+   lists per action come from those rows.
+6. The destination's apply step gets the lists:
+   - parquet (here): ONE write of every partition needing data —
+     dynamic partition overwrite, the reference's delete+reinsert fused
+     into an atomic-per-partition step, or an append under
+     ``skip_delete`` — then the delete-only directory removals;
+   - JDBC (``operators.sync_jdbc``): ONE ``DELETE`` of every partition
+     being replaced or dropped, then ONE distributed append.
+
+Comparison runs in the DESTINATION's type domain (SURVEY §7.5), the
+direction the reference hashes: the source goes through the same
+dest-type casts it is written with (copy/copy.go:217-221) and the
+destination is hashed raw. The other direction diverges under any lossy
+cast — a just-repaired partition would re-hash 'inconsistent' on every
+run and sync would never converge. Destination partition columns are
+re-cast to the source's key types so the diff join keys align.
 
 At scale: the data write shuffles nothing (read → filter partitions →
-write partitioned); the verdict plan reuses the already-computed stats.
-The partition-pruning filter (``isin`` over verdict partitions) prunes the
-source scan when the source itself is partition-laid-out.
+write partitioned), and the key filter prunes the source scan when the
+source is itself partition-laid-out.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_table_copier_spark.operators import sync_jdbc
 from clickhouse_table_copier_spark.operators.diff import Verdict, diff_partitions
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
+from clickhouse_table_copier_spark.sources.table import TableRef, load_table
 
 
 @dataclass(frozen=True)
@@ -53,183 +72,188 @@ class SyncResult:
     report: DataFrame  # partition, src_rows, dest_rows, verdict, action
     copied_partitions: int
     deleted_partitions: int
+    rows: list[Row] | None = None  # the collected report; None on dry runs
+
+
+def _literal(value, dtype: str) -> Column:
+    # a TIMESTAMP_NTZ value is wall-clock time: pass it as text so neither
+    # Python's nor the session's time zone shifts it on the way in
+    if dtype == "timestamp_ntz" and value is not None:
+        value = value.isoformat(" ")
+    return F.lit(value).cast(dtype)
+
+
+def where_keys(df: DataFrame, names: list[str], keys: list[tuple]) -> DataFrame:
+    """Rows of ``df`` whose partition key (``names``) is one of ``keys``.
+
+    Each literal is cast to its key column's type, so values read back
+    from a collected report compare in the column's own type (a
+    ``TIMESTAMP_NTZ`` key comes back as a naive datetime, which ``F.lit``
+    alone would type as ``TIMESTAMP``). A NULL key part matches NULL."""
+    types = dict(df.dtypes)
+    key = F.struct(*[F.col(n) for n in names])
+    return df.where(
+        key.isin(
+            [F.struct(*[_literal(v, types[n]).alias(n) for n, v in zip(names, k)]) for k in keys]
+        )
+    )
 
 
 def _dest_exists(spark: SparkSession, path: str) -> bool:
     jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
-def _delete_partition_dirs(spark: SparkSession, dest_path: str, spec: PartitionSpec, part_rows) -> int:
-    """Remove hive-style partition directories — the engine's
-    ``ALTER TABLE … DELETE WHERE partition`` for the delete-only path."""
+def _delete_partition_dirs(
+    spark: SparkSession, path: str, names: list[str], types: dict[str, str], keys: list[tuple]
+) -> list[tuple]:
+    """Remove the directories holding ``keys`` — the engine's ``ALTER
+    TABLE … DELETE WHERE partition`` for the delete-only path.
+
+    Directories come from the files Spark wrote (``_metadata.file_path``),
+    so NULL keys (``__HIVE_DEFAULT_PARTITION__``) and escaped values
+    (``a/b`` → ``a%2Fb``) resolve exactly as Spark named them. Returns the
+    keys whose directory was actually removed."""
+    if not keys:
+        return []
+    files = spark.read.parquet(path).select(
+        *[F.col(n).cast(types[n]).alias(n) for n in names],
+        F.regexp_replace("_metadata.file_path", "/[^/]*$", "").alias("dir"),
+    )
     jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(dest_path).getFileSystem(conf)
-    deleted = 0
-    for row in part_rows:
-        subdir = "/".join(f"{n}={row[n]}" for n in spec.names)
-        p = jvm.org.apache.hadoop.fs.Path(f"{dest_path.rstrip('/')}/{subdir}")
-        if fs.exists(p):
-            fs.delete(p, True)
-            deleted += 1
-    return deleted
+    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    removed = []
+    for r in where_keys(files, names, keys).distinct().collect():
+        # file_path is a URI string: escapes such as %2F arrive as %252F
+        if fs.delete(jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r["dir"])), True):
+            removed.append(tuple(r[n] for n in names))
+    return removed
+
+
+def _apply_parquet(
+    spark: SparkSession, dest: TableRef, write: DataFrame, names: list[str], keys: dict
+) -> list[tuple]:
+    """Parquet apply step; returns the keys whose partitions were deleted."""
+    if keys["written"]:
+        writer = write.write.partitionBy(*names)
+        # skip_delete turns every replacement into an append; 'copied'
+        # partitions are absent from dest, so one append covers them too
+        if keys["appended"]:
+            writer.mode("append").parquet(dest.location)
+        else:
+            # partitionOverwriteMode is forced per write (overrides the
+            # session conf): under Spark's default STATIC mode this
+            # overwrite would delete every partition not in the written set
+            # — silent data loss for callers who built their own session.
+            writer.option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(
+                dest.location
+            )
+    return _delete_partition_dirs(spark, dest.location, names, dict(write.dtypes), keys["deleted"])
 
 
 def sync(
     spark: SparkSession,
     src: DataFrame,
-    dest_path: str,
+    dest: str | TableRef,
     spec: PartitionSpec,
     options: SyncOptions = SyncOptions(),
     semantic: dict | None = None,
 ) -> SyncResult:
-    """Synchronize a hive-partitioned parquet destination with ``src``.
+    """Make ``dest`` — a parquet directory path or a :class:`TableRef`
+    (parquet or jdbc) — match ``src`` partition-wise.
 
     Returns the per-partition report (the --info output, C11) plus action
-    counts. ``dry_run`` computes the identical report with no writes —
-    exactly the reference's Info()/Copy() split (copy/copy.go:12 vs :139).
+    counts. ``semantic`` canonicalizes UUID/IP/JSON source columns before
+    hashing and writing (cast-before-hash, copy/copy.go:221).
     """
+    if isinstance(dest, str):
+        dest = TableRef(location=dest)
+    if dest.fmt not in ("parquet", "jdbc"):
+        raise ValueError("sync destination must be a parquet path or a jdbc endpoint")
+    jdbc = dest.fmt == "jdbc"
     if semantic:
-        # canonicalize UUID/IP/JSON columns before hashing/writing —
-        # cast-before-hash comparability (copy/copy.go:221)
         from clickhouse_table_copier_spark.plans.casting import apply_semantic
 
         src = apply_semantic(src, semantic)
+    names = spec.names
     src_parts = spec.with_partition_columns(src)
-    data_cols = [c for c in src.columns if c not in spec.names]
 
-    if not _dest_exists(spark, dest_path):
+    if jdbc:
+        exists = sync_jdbc._jdbc_table_exists(spark, dest)
+    else:
+        exists = _dest_exists(spark, dest.location)
+    if not exists:
         # Destination absent → everything is a 'copy' (copy.go:262-266).
+        write = src_parts
         report = (
-            src_parts.groupBy(*spec.names)
+            src_parts.groupBy(*names)
             .agg(F.count(F.lit(1)).alias("src_rows"))
             .withColumn("dest_rows", F.lit(None).cast("bigint"))
             .withColumn("verdict", F.lit(Verdict.COPY.value))
-            .withColumn("action", F.lit("copied" if not options.dry_run else "none"))
         )
-        copied = 0
-        if not options.dry_run:
-            src_parts.write.partitionBy(*spec.names).mode("overwrite").parquet(dest_path)
-            copied = report.count()
-        return SyncResult(report=report, copied_partitions=copied, deleted_partitions=0)
-
-    dest = spark.read.parquet(dest_path)
-    # Hash-comparability contract (SURVEY §7.5): compare in the
-    # DESTINATION's type domain, the direction the reference hashes — the
-    # source goes through the same dest-type cast exprs it would INSERT
-    # with (copy/copy.go:217-221) and the dest is hashed raw. The other
-    # direction (casting dest back to source types) diverges under any
-    # lossy cast: a just-repaired partition (written as dest types) would
-    # re-hash 'inconsistent' on every subsequent run and sync would never
-    # converge. Partition columns read back from hive directory names are
-    # re-cast to the source spec's types so the diff join keys align.
-    src_types = dict(src_parts.dtypes)
-    dest_types = dict(dest.dtypes)
-    common = [c for c in data_cols if c in dest.columns]
-    src_cmp = src_parts.select(
-        *spec.names,
-        *[F.col(c).cast(dest_types[c]).alias(c) for c in common],
-    )
-    dest_norm = dest.select(
-        *[F.col(n).cast(src_types[n]).alias(n) for n in spec.names],
-        *common,
-    )
-
-    report = diff_partitions(
-        src_cmp,
-        dest_norm,
-        PartitionSpec.bare(*spec.names),
-        cols=common,
-        check_hashes=options.check_hashes,
-    )
-
-    action = (
-        F.when(F.col("verdict") == Verdict.COPY.value, F.lit("copied"))
-        .when(
-            (F.col("verdict") == Verdict.INCONSISTENT.value)
-            & F.lit(not options.skip_delete)
-            & F.lit(not options.skip_reimport),
-            F.lit("overwritten"),
+    else:
+        dest_df = load_table(spark, dest)
+        by_lower = {c.lower(): c for c in dest_df.columns}
+        missing = [n for n in names if n.lower() not in by_lower]
+        if missing:
+            raise ValueError(f"dest table lacks partition columns: {missing}")
+        common = [c for c in src.columns if c not in names and c.lower() in by_lower]
+        src_types = dict(src_parts.dtypes)
+        dest_norm = dest_df.select(
+            *[F.col(by_lower[n.lower()]).cast(src_types[n]).alias(n) for n in names],
+            *[F.col(by_lower[c.lower()]).alias(c) for c in common],
         )
-        .when(
-            (F.col("verdict") == Verdict.INCONSISTENT.value)
-            & F.lit(options.skip_delete)
-            & F.lit(not options.skip_reimport),
-            F.lit("appended"),
+        dest_types = dict(dest_norm.dtypes)
+        # What is compared is what gets WRITTEN — the reference's S6
+        # insert: the common columns cast to the DESTINATION's types
+        # (INSERT INTO dest (cols) SELECT castExprs, database.go:486-507).
+        # Source-only columns are not copied; dest-only columns are absent
+        # from rewritten partitions (readers see NULLs via schema merging).
+        write = src_parts.select(
+            *names, *[F.col(c).cast(dest_types[c]).alias(c) for c in common]
         )
-        .when(
-            (F.col("verdict") == Verdict.INCONSISTENT.value)
-            & F.lit(not options.skip_delete)
-            & F.lit(options.skip_reimport),
-            F.lit("deleted"),
+        report = diff_partitions(
+            write, dest_norm, PartitionSpec.bare(*names),
+            cols=common, check_hashes=options.check_hashes,
         )
-        .otherwise(F.lit("none"))
-    )
-    report = report.withColumn(
-        "action", action if not options.dry_run else F.lit("none")
-    )
 
+    # README parity: both skip flags leave an inconsistent partition alone
+    inconsistent = {
+        (False, False): "overwritten",
+        (True, False): "appended",
+        (False, True): "deleted",
+    }.get((options.skip_delete, options.skip_reimport), "none")
+    action = F.lit("none") if options.dry_run else (
+        F.when(F.col("verdict") == Verdict.COPY.value, "copied")
+        .when(F.col("verdict") == Verdict.INCONSISTENT.value, inconsistent)
+        .otherwise("none")
+    )
+    report = report.withColumn("action", action)
     if options.dry_run:
         return SyncResult(report=report, copied_partitions=0, deleted_partitions=0)
 
-    # Materialize the report NOW: it lazily references the destination
-    # files this sync is about to replace. One collect of metadata-sized
-    # rows (the reference holds the same list from system.parts).
-    report_rows = report.collect()
-    report = spark.createDataFrame(report_rows, report.schema)
+    # Metadata-sized (the reference collects the same lists from
+    # system.parts, database.go:390-417), and collected BEFORE mutation.
+    rows = report.collect()
+    key = lambda r: tuple(r[n] for n in names)  # noqa: E731
+    keys = {a: [key(r) for r in rows if r["action"] == a]
+            for a in ("copied", "overwritten", "appended", "deleted")}
+    keys["written"] = keys["copied"] + keys["overwritten"] + keys["appended"]
+    if len(keys["written"]) < len(rows):  # else all is written: no filter
+        write = where_keys(write, names, keys["written"])
 
-    # What gets WRITTEN is the reference's S6 insert: the common columns,
-    # cast to the DESTINATION's types (INSERT INTO dest (cols) SELECT
-    # castExprs — database.go:486-507), so repaired partitions stay
-    # readable under the destination's schema. Source-only columns are
-    # not copied; dest-only columns are absent from rewritten partitions
-    # (parquet's honest analogue of ClickHouse filling defaults —
-    # readers see NULLs via schema merging).
-    src_parts = src_parts.select(
-        *spec.names,
-        *[F.col(c).cast(dest_types[c]).alias(c) for c in common],
+    apply = sync_jdbc.apply if jdbc else _apply_parquet
+    removed = set(apply(spark, dest, write, names, keys))
+    # never report a delete that did not happen
+    rows = [
+        Row(**{**r.asDict(), "action": "none"})
+        if r["action"] == "deleted" and key(r) not in removed else r
+        for r in rows
+    ]
+    return SyncResult(
+        report=spark.createDataFrame(rows, report.schema),
+        copied_partitions=len(keys["written"]),
+        deleted_partitions=len(removed),
+        rows=rows,
     )
-
-    # Driver-side partition lists are metadata-sized (the reference collects
-    # the same lists from system.parts, database.go:390-417).
-    to_write = report.where(F.col("action").isin("copied", "overwritten")).select(*spec.names)
-    write_keys = [tuple(r[n] for n in spec.names) for r in to_write.collect()]
-    copied = deleted = 0
-
-    if write_keys:
-        # ONE dynamic-partition-overwrite write for every partition that
-        # needs data — replaces the reference's per-partition
-        # delete+insert round trips (D1+D2 fused, atomic per partition).
-        key_col = F.struct(*[F.col(n) for n in spec.names])
-        filtered = src_parts.where(
-            key_col.isin([F.struct(*[F.lit(v) for v in k]) for k in write_keys])
-        )
-        # partitionOverwriteMode is forced per-write (overrides the session
-        # conf): under Spark's default STATIC mode this overwrite would
-        # delete every dest partition not in the written set — silent data
-        # loss for library callers who built their own SparkSession.
-        (
-            filtered.write.partitionBy(*spec.names)
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(dest_path)
-        )
-        copied = len(write_keys)
-
-    append_rows = report.where(F.col("action") == "appended").select(*spec.names).collect()
-    if append_rows:
-        keys = [tuple(r[n] for n in spec.names) for r in append_rows]
-        key_col = F.struct(*[F.col(n) for n in spec.names])
-        src_parts.where(
-            key_col.isin([F.struct(*[F.lit(v) for v in k]) for k in keys])
-        ).write.partitionBy(*spec.names).mode("append").parquet(dest_path)
-        copied += len(keys)
-
-    delete_rows = report.where(F.col("action") == "deleted").collect()
-    if delete_rows:
-        deleted = _delete_partition_dirs(spark, dest_path, spec, delete_rows)
-
-    return SyncResult(report=report, copied_partitions=copied, deleted_partitions=deleted)

@@ -1,25 +1,22 @@
-"""Sync into a JDBC destination — the reference's native shape end-to-end.
+"""The JDBC destination of the sync pipeline (``operators.sync``).
 
-The parquet path (``operators.sync``) replaces delete+reinsert with
-dynamic partition overwrite; a remote SQL server has no such primitive,
-so this module is the faithful D1+D2 loop (``/root/reference/copy/
-copy.go:139-271``): classify partitions with ONE diff join, then
+A remote SQL server has no dynamic partition overwrite, so the JDBC apply
+step is the reference's D1+D2 loop (``copy/copy.go:139-271``) run once
+over the partition lists ``sync`` collected:
 
 - D1 delete: one ``DELETE FROM t WHERE (k=v AND …) OR (…)`` statement
-  covering every inconsistent partition (``ALTER TABLE … DELETE``
-  parity, database.go:463-484) — driver-side, metadata-sized;
+  covering every partition being replaced or dropped (``ALTER TABLE …
+  DELETE`` parity, database.go:463-484) — driver-side, metadata-sized;
 - D2 insert: one distributed append of all partitions needing data
   (``INSERT … SELECT`` parity, database.go:486-507) via the executors'
   JDBC connections.
 
-Comparison runs in the DESTINATION's type domain (source hashed through
-the dest-type casts it will INSERT with) — same convergence contract as
-the parquet path. Column-name case is normalized (Derby/Oracle uppercase
-identifiers) so the diff join and the insert projection line up.
-
 The delete-then-insert window is visible to concurrent readers — exactly
 the reference's semantics, and why both verify with fingerprints on the
 next run rather than assuming atomicity.
+
+Also here: the WHERE rendering with per-dialect string escaping, the
+driver-side statement runner, and the SQLState-based existence probe.
 """
 
 from __future__ import annotations
@@ -28,17 +25,8 @@ import datetime
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from clickhouse_table_copier_spark.operators.diff import Verdict, diff_partitions
-from clickhouse_table_copier_spark.operators.sync import SyncOptions, SyncResult
-from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
-from clickhouse_table_copier_spark.sources.table import (
-    TableRef,
-    jdbc_retry_policy,
-    load_table,
-    write_table,
-)
+from clickhouse_table_copier_spark.sources.table import TableRef, jdbc_retry_policy, write_table
 
 # Dialects whose string literals treat backslash as an escape character by
 # default (ClickHouse — the reference's native target — and MySQL family).
@@ -114,9 +102,9 @@ def _jdbc_execute(spark: SparkSession, ref: TableRef, sql: str) -> None:
 # SQLStates that mean "that table does not exist" — Derby 42X05,
 # SQL-Server/MySQL-family 42S02, Postgres 42P01, ODBC S0002, DB2 42704.
 # Anything else (connection refused, auth failure, timeout) is NOT
-# evidence of absence: treating it as missing routed sync_to_jdbc into the
-# dest-absent branch whose overwrite DROPS the remote table — destroying
-# dest-only data on a transient network blip.
+# evidence of absence: treating it as missing would route sync into the
+# dest-absent branch, which writes every source partition again on top of
+# the rows already there — duplicating the table on a transient blip.
 _TABLE_MISSING_SQLSTATES = frozenset({"42X05", "42S02", "42P01", "S0002", "42704"})
 
 
@@ -157,117 +145,19 @@ def _jdbc_table_exists(spark: SparkSession, ref: TableRef) -> bool:
             time.sleep(delay)
 
 
-def sync_to_jdbc(
-    spark: SparkSession,
-    src: DataFrame,
-    dest_ref: TableRef,
-    spec: PartitionSpec,
-    options: SyncOptions = SyncOptions(),
-) -> SyncResult:
-    """Make the JDBC destination table match ``src`` partition-wise."""
-    src_parts = spec.with_partition_columns(src)
-    data_cols = [c for c in src.columns if c not in spec.names]
-
-    if not _jdbc_table_exists(spark, dest_ref):
-        report = (
-            src_parts.groupBy(*spec.names)
-            .agg(F.count(F.lit(1)).alias("src_rows"))
-            .withColumn("dest_rows", F.lit(None).cast("bigint"))
-            .withColumn("verdict", F.lit(Verdict.COPY.value))
-            .withColumn("action", F.lit("copied" if not options.dry_run else "none"))
-        )
-        copied = 0
-        if not options.dry_run:
-            write_table(src_parts, dest_ref, mode="overwrite")
-            copied = report.count()
-        return SyncResult(report=report, copied_partitions=copied, deleted_partitions=0)
-
-    dest = load_table(spark, dest_ref)
-    # case-normalize (Derby/Oracle uppercase identifiers) back to the
-    # source-side names so joins/projections line up
-    by_lower = {c.lower(): c for c in dest.columns}
-    missing = [n for n in spec.names if n.lower() not in by_lower]
-    if missing:
-        raise ValueError(f"dest table lacks partition columns: {missing}")
-    common = [c for c in data_cols if c.lower() in by_lower]
-    src_types = dict(src_parts.dtypes)
-    dest_named = dest.select(
-        *[F.col(by_lower[n.lower()]).cast(src_types[n]).alias(n) for n in spec.names],
-        *[F.col(by_lower[c.lower()]).alias(c) for c in common],
-    )
-    dest_types = dict(dest_named.dtypes)
-    src_cmp = src_parts.select(
-        *spec.names,
-        *[F.col(c).cast(dest_types[c]).alias(c) for c in common],
-    )
-
-    report = diff_partitions(
-        src_cmp,
-        dest_named,
-        PartitionSpec.bare(*spec.names),
-        cols=common,
-        check_hashes=options.check_hashes,
-    )
-
-    action = (
-        F.when(F.col("verdict") == Verdict.COPY.value, F.lit("copied"))
-        .when(
-            (F.col("verdict") == Verdict.INCONSISTENT.value)
-            & F.lit(not options.skip_delete)
-            & F.lit(not options.skip_reimport),
-            F.lit("overwritten"),
-        )
-        .when(
-            (F.col("verdict") == Verdict.INCONSISTENT.value)
-            & F.lit(options.skip_delete)
-            & F.lit(not options.skip_reimport),
-            F.lit("appended"),
-        )
-        .when(
-            (F.col("verdict") == Verdict.INCONSISTENT.value)
-            & F.lit(not options.skip_delete)
-            & F.lit(options.skip_reimport),
-            F.lit("deleted"),
-        )
-        .otherwise(F.lit("none"))
-    )
-    report = report.withColumn(
-        "action", action if not options.dry_run else F.lit("none")
-    )
-    if options.dry_run:
-        return SyncResult(report=report, copied_partitions=0, deleted_partitions=0)
-
-    rows = report.collect()  # metadata-sized, materialized before mutation
-    report = spark.createDataFrame(rows, report.schema)
-    key = lambda r: tuple(r[n] for n in spec.names)  # noqa: E731
-
+def apply(
+    spark: SparkSession, ref: TableRef, write: DataFrame, names: list[str], keys: dict
+) -> list[tuple]:
+    """JDBC apply step; returns the keys whose rows were deleted."""
     # D1: one DELETE covering every partition being replaced or dropped
-    doomed = [key(r) for r in rows if r["action"] in ("overwritten", "deleted")]
-    deleted = 0
+    doomed = keys["overwritten"] + keys["deleted"]
     if doomed:
         where = sql_equality_where(
-            list(spec.names),
-            doomed,
-            backslash_escapes=dialect_backslash_escapes(dest_ref.location),
+            names, doomed, backslash_escapes=dialect_backslash_escapes(ref.location)
         )
-        _jdbc_execute(spark, dest_ref, f"DELETE FROM {dest_ref.table} WHERE {where}")
-        deleted = len(doomed)
-
-    # D2: one distributed append of everything needing data, cast to the
-    # destination's types (INSERT INTO dest (cols) SELECT castExprs)
-    to_write = [
-        key(r) for r in rows if r["action"] in ("copied", "overwritten", "appended")
-    ]
-    copied = 0
-    if to_write:
-        key_col = F.struct(*[F.col(n) for n in spec.names])
-        filtered = src_parts.where(
-            key_col.isin([F.struct(*[F.lit(v) for v in k]) for k in to_write])
-        ).select(
-            *spec.names,
-            *[F.col(c).cast(dest_types[c]).alias(c) for c in common],
-        )
-        write_table(filtered, dest_ref, mode="append")
-        copied = len(to_write)
-
-    return SyncResult(report=report, copied_partitions=copied, deleted_partitions=deleted)
+        _jdbc_execute(spark, ref, f"DELETE FROM {ref.table} WHERE {where}")
+    # D2: one distributed append of everything needing data (creates the
+    # table when the destination was absent)
+    if keys["written"]:
+        write_table(write, ref, mode="append")
+    return doomed

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from clickhouse_table_copier_spark.operators.sync import SyncOptions, SyncResult, sync
+from clickhouse_table_copier_spark.operators.sync import SyncOptions, SyncResult, sync, where_keys
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
 
 
@@ -112,12 +112,8 @@ def incremental_sync(
     if not touched:
         return ContinuousSyncResult(touched_partitions=[], sync_result=None)
 
-    src = spark.read.parquet(source_dir)
-    src_parts = spec.with_partition_columns(src)
-    key = F.struct(*[F.col(n) for n in spec.names])
-    pruned = src_parts.where(
-        key.isin([F.struct(*[F.lit(v) for v in k]) for k in touched])
-    )
+    src_parts = spec.with_partition_columns(spark.read.parquet(source_dir))
+    pruned = where_keys(src_parts, spec.names, touched)
     # hand sync a plain source frame: drop only DERIVED partition columns
     # (bare-column keys ARE data columns and must stay)
     derived = [f.name for f in spec.fields if f.expr != f.name]

@@ -8,7 +8,9 @@ Usage:
 
 The driver re-verifies only the first 50 window slots; VERDICT r16 set
 the per-round budget of CHANGED queries at <=35.  This tool makes the
-fan-out of any helper edit visible BEFORE committing it.
+fan-out of any helper edit visible BEFORE committing it: ``diff`` exits 1
+when more than BUDGET queries changed, and 2 when no snapshot has been
+saved.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 _SNAP = os.path.join(_REPO, "scripts", ".fp_budget_snapshot.json")
+BUDGET = 35  # changed queries per round
 
 
 def _current() -> dict[str, str]:
@@ -36,6 +39,9 @@ def _current() -> dict[str, str]:
 
 def main() -> int:
     cmd = sys.argv[1] if len(sys.argv) > 1 else "diff"
+    if cmd != "save" and not os.path.exists(_SNAP):
+        print(f"no snapshot at {_SNAP}: run `save` first", file=sys.stderr)
+        return 2
     cur = _current()
     if cmd == "save":
         with open(_SNAP, "w") as f:
@@ -51,7 +57,9 @@ def main() -> int:
         print(f"  {n}")
     if gone:
         print(f"!! queries REMOVED: {gone}")
-    return 0
+    if len(changed) > BUDGET:
+        print(f"!! {len(changed)} changed queries exceed the budget of {BUDGET}")
+    return 1 if len(changed) > BUDGET else 0
 
 
 if __name__ == "__main__":

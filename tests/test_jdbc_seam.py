@@ -294,7 +294,7 @@ def test_jsonl_and_csv_table_refs(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# sync_to_jdbc: the reference's native shape (classify → DELETE → INSERT)
+# sync into JDBC: the reference's native shape (classify → DELETE → INSERT)
 # against a real JDBC destination
 # ---------------------------------------------------------------------------
 def _jdbc_ref(table):
@@ -305,8 +305,7 @@ def _jdbc_ref(table):
 
 
 def test_sync_to_jdbc_full_cycle(spark):
-    from clickhouse_table_copier_spark.operators.sync_jdbc import sync_to_jdbc
-    from clickhouse_table_copier_spark.operators.sync import SyncOptions
+    from clickhouse_table_copier_spark.operators.sync import SyncOptions, sync
     from clickhouse_table_copier_spark.plans.partition_spec import (
         PartitionField,
         PartitionSpec,
@@ -320,11 +319,11 @@ def test_sync_to_jdbc_full_cycle(spark):
     )
 
     # 1. dest absent → full copy
-    res = sync_to_jdbc(spark, li, _jdbc_ref("li_sync"), spec)
+    res = sync(spark, li, _jdbc_ref("li_sync"), spec)
     assert res.copied_partitions == 12
 
     # 2. identical → all-identical, nothing written
-    res2 = sync_to_jdbc(spark, li, _jdbc_ref("li_sync"), spec)
+    res2 = sync(spark, li, _jdbc_ref("li_sync"), spec)
     assert res2.copied_partitions == 0 and res2.deleted_partitions == 0
     assert {r["verdict"] for r in res2.report.collect()} == {"identical"}
 
@@ -338,13 +337,13 @@ def test_sync_to_jdbc_full_cycle(spark):
     _jdbc_execute(
         spark, _jdbc_ref("li_sync"), 'DELETE FROM li_sync WHERE "ship_month" = 7'
     )
-    res3 = sync_to_jdbc(spark, li, _jdbc_ref("li_sync"), spec)
+    res3 = sync(spark, li, _jdbc_ref("li_sync"), spec)
     actions = {r["ship_month"]: r["action"] for r in res3.report.collect()}
     assert actions[4] == "overwritten" and actions[7] == "copied"
     assert res3.deleted_partitions == 1 and res3.copied_partitions == 2
 
     # 4. converged: next pass reports all-identical
-    res4 = sync_to_jdbc(
+    res4 = sync(
         spark, li, _jdbc_ref("li_sync"), spec, SyncOptions(dry_run=True)
     )
     assert {r["verdict"] for r in res4.report.collect()} == {"identical"}
@@ -366,10 +365,8 @@ def test_sync_to_jdbc_tuple_key_delete(spark):
     """Tuple partition keys through the REAL delete path: the OR-of-tuples
     WHERE must remove exactly the doomed (type, band) partitions — the
     arity case the reference's GenerateWhere breaks at (tmp=+1 bug)."""
-    from clickhouse_table_copier_spark.operators.sync_jdbc import (
-        _jdbc_execute,
-        sync_to_jdbc,
-    )
+    from clickhouse_table_copier_spark.operators.sync import sync
+    from clickhouse_table_copier_spark.operators.sync_jdbc import _jdbc_execute
     from clickhouse_table_copier_spark.plans.partition_spec import (
         PartitionField,
         PartitionSpec,
@@ -393,7 +390,7 @@ def test_sync_to_jdbc_tuple_key_delete(spark):
             "createTableColumnTypes": "event_type VARCHAR(32)",
         },
     )
-    res = sync_to_jdbc(spark, ev, ref, spec)
+    res = sync(spark, ev, ref, spec)
     n_parts = res.copied_partitions
     assert n_parts >= 6  # several types × bands
 
@@ -404,20 +401,20 @@ def test_sync_to_jdbc_tuple_key_delete(spark):
         " WHERE (\"event_type\" = 'click' AND \"vband\" = 0)"
         " OR (\"event_type\" = 'view' AND \"vband\" = 1)",
     )
-    res2 = sync_to_jdbc(spark, ev, ref, spec)
+    res2 = sync(spark, ev, ref, spec)
     acts = {(r["event_type"], r["vband"]): r["action"] for r in res2.report.collect()}
     assert acts[("click", 0)] == "overwritten" and acts[("view", 1)] == "overwritten"
     assert sum(1 for a in acts.values() if a == "overwritten") == 2
     assert res2.deleted_partitions == 2 and res2.copied_partitions == 2
 
-    res3 = sync_to_jdbc(spark, ev, ref, spec)
+    res3 = sync(spark, ev, ref, spec)
     assert {r["verdict"] for r in res3.report.collect()} == {"identical"}
 
 
 def test_sync_to_jdbc_rejects_missing_partition_columns(spark):
     """A dest table lacking the partition columns is a config error, not a
     silent misclassification."""
-    from clickhouse_table_copier_spark.operators.sync_jdbc import sync_to_jdbc
+    from clickhouse_table_copier_spark.operators.sync import sync
     from clickhouse_table_copier_spark.plans.partition_spec import (
         PartitionField,
         PartitionSpec,
@@ -440,7 +437,7 @@ def test_sync_to_jdbc_rejects_missing_partition_columns(spark):
     )
     spec = PartitionSpec.of(PartitionField("bucket", "CAST(a % 3 AS INT)"))
     with pytest.raises(ValueError, match="lacks partition columns"):
-        sync_to_jdbc(spark, src, ref, spec)
+        sync(spark, src, ref, spec)
 
 
 def test_write_table_tolerates_read_sharding_options(spark, tmp_path):

@@ -1,0 +1,182 @@
+"""The one sync pipeline on frames of a few rows, in the default lane.
+
+Every step runs against both destination kinds, a parquet directory and a
+Derby JDBC table: bootstrap, a resync over one mutated, one missing and
+one extra partition, the delete-only path and a dry run. The partition
+keys include NULL; on parquet also a value Spark escapes in directory
+names (``a/b``). After each step the destination's partition fingerprints
+must equal the source's, and the report must say what changed on disk or
+in the table.
+"""
+
+from __future__ import annotations
+
+import datetime
+import os
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from clickhouse_table_copier_spark.operators.fingerprint import partition_fingerprints
+from clickhouse_table_copier_spark.operators.sync import SyncOptions, sync
+from clickhouse_table_copier_spark.plans.partition_spec import PartitionField, PartitionSpec
+from clickhouse_table_copier_spark.sources.table import TableRef, load_table, write_table
+
+DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
+SPEC = PartitionSpec.bare("k")
+
+
+@pytest.fixture(params=["parquet", "jdbc"])
+def dest(request, tmp_path):
+    """(destination, its three source keys and one destination-only key,
+    the key column's type)."""
+    if request.param == "parquet":
+        return TableRef(location=str(tmp_path / "dest")), (None, "a/b", "x", "zz"), "string"
+    # Spark writes a NULL string to Derby as a CLOB, which no comparable
+    # column type accepts, so the Derby table is keyed by integers
+    ref = TableRef(
+        location=f"jdbc:derby:memory:pipe{uuid.uuid4().hex};create=true",
+        fmt="jdbc",
+        table="t",
+        options={"driver": DERBY_DRIVER},
+    )
+    return ref, (None, 1, 2, 9), "bigint"
+
+
+def _fingerprints(df, key: str = "k", key_type: str = "string") -> dict:
+    cols = ["id", "v"]
+    df = df.select(F.col(key).cast(key_type).alias(key), *[F.col(c).cast("bigint") for c in cols])
+    rows = partition_fingerprints(df, PartitionSpec.bare(key), cols).collect()
+    return {r[key]: (r["rows"], r["fingerprint"]) for r in rows}
+
+
+def _replace(spark, dest: TableRef, df) -> None:
+    """Overwrite the whole destination with ``df``."""
+    if dest.fmt == "jdbc":
+        write_table(df, dest, mode="overwrite")
+    else:
+        df.write.partitionBy("k").option("partitionOverwriteMode", "static").mode(
+            "overwrite"
+        ).parquet(dest.location)
+
+
+def _dirs(dest: TableRef) -> set[str]:
+    return {d for d in os.listdir(dest.location) if d.startswith("k=")}
+
+
+def _report(res) -> dict:
+    rows = res.rows if res.rows is not None else res.report.collect()
+    return {r["k"]: (r["verdict"], r["action"]) for r in rows}
+
+
+def test_pipeline_steps(spark, dest):
+    dest, (null, a, b, extra), key_type = dest
+    schema = f"id BIGINT, k {key_type}, v BIGINT"
+    rows = [(1, null, 10), (2, null, 20), (3, a, 30), (4, b, 40), (5, b, 50)]
+    src = spark.createDataFrame(rows, schema)
+    extra_row = spark.createDataFrame([(6, extra, 60)], schema)
+    fp = lambda df: _fingerprints(df, "k", key_type)  # noqa: E731
+    src_fp, extra_fp = fp(src), fp(extra_row)
+
+    # 1. bootstrap into an absent destination
+    res = sync(spark, src, dest, SPEC)
+    assert _report(res) == {k: ("copy", "copied") for k in (null, a, b)}
+    assert (res.copied_partitions, res.deleted_partitions) == (3, 0)
+    assert fp(load_table(spark, dest)) == src_fp
+    if dest.fmt == "parquet":
+        assert _dirs(dest) == {"k=__HIVE_DEFAULT_PARTITION__", "k=a%2Fb", "k=x"}
+
+    # 2. resync: NULL partition mutated, `a` missing, `extra` only in dest
+    drifted = spark.createDataFrame([(1, null, 11), (2, null, 20), (4, b, 40), (5, b, 50)], schema)
+    _replace(spark, dest, drifted.unionByName(extra_row))
+    res = sync(spark, src, dest, SPEC)
+    assert _report(res) == {
+        null: ("inconsistent", "overwritten"),
+        a: ("copy", "copied"),
+        b: ("identical", "none"),
+        extra: ("extra", "none"),
+    }
+    # JDBC replaces a partition with DELETE + INSERT; parquet overwrites it
+    assert res.copied_partitions == 2
+    assert res.deleted_partitions == (1 if dest.fmt == "jdbc" else 0)
+    assert fp(load_table(spark, dest)) == {**src_fp, **extra_fp}
+
+    # 3. delete-only: every source partition mutated, skip_reimport
+    _replace(spark, dest, src.withColumn("v", F.col("v") + 1).unionByName(extra_row))
+    res = sync(spark, src, dest, SPEC, SyncOptions(skip_reimport=True))
+    assert _report(res) == {
+        **{k: ("inconsistent", "deleted") for k in (null, a, b)},
+        extra: ("extra", "none"),
+    }
+    assert (res.copied_partitions, res.deleted_partitions) == (0, 3)
+    assert fp(load_table(spark, dest)) == extra_fp
+    if dest.fmt == "parquet":
+        assert _dirs(dest) == {"k=zz"}
+
+    # 4. dry run: reports the three missing partitions, changes nothing
+    res = sync(spark, src, dest, SPEC, SyncOptions(dry_run=True))
+    assert res.rows is None
+    assert _report(res) == {
+        **{k: ("copy", "none") for k in (null, a, b)},
+        extra: ("extra", "none"),
+    }
+    assert (res.copied_partitions, res.deleted_partitions) == (0, 0)
+    assert fp(load_table(spark, dest)) == extra_fp
+
+    # and a real run converges
+    res = sync(spark, src, dest, SPEC)
+    assert res.copied_partitions == 3
+    assert fp(load_table(spark, dest)) == {**src_fp, **extra_fp}
+
+
+def test_timestamp_ntz_key_resyncs(spark, tmp_path):
+    """A TIMESTAMP_NTZ key survives the round trip through a collected
+    report, with a session time zone that is not the host's."""
+    ts = [datetime.datetime(2024, 1, 1, 10), datetime.datetime(2024, 1, 2, 0, 0, 0, 500000)]
+    schema = "id BIGINT, ts TIMESTAMP_NTZ, v BIGINT"
+    src = spark.createDataFrame([(1, ts[0], 10), (2, ts[1], 20), (3, ts[1], 30)], schema)
+    spec = PartitionSpec.bare("ts")
+    dest = str(tmp_path / "dest")
+    fp = lambda df: _fingerprints(df, "ts", "timestamp_ntz")  # noqa: E731
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        assert sync(spark, src, dest, spec).copied_partitions == 2
+        mutated = spark.createDataFrame([(1, ts[0], 10), (2, ts[1], 21), (3, ts[1], 30)], schema)
+        mutated.write.partitionBy("ts").option("partitionOverwriteMode", "static").mode(
+            "overwrite"
+        ).parquet(dest)
+
+        res = sync(spark, src, dest, spec)
+        assert {r["ts"]: r["action"] for r in res.rows} == {ts[0]: "none", ts[1]: "overwritten"}
+        assert fp(spark.read.parquet(dest)) == fp(src)
+        again = sync(spark, src, dest, spec, SyncOptions(dry_run=True))
+        assert {r["verdict"] for r in again.report.collect()} == {"identical"}
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_sync_job_counts(spark, tmp_path):
+    """Spark jobs for one bootstrap and one resync, each followed by the
+    report read the CLI prints. The report is collected once and the key
+    lists come from those rows, so neither count may grow back."""
+    sc = spark.sparkContext
+    spec = PartitionSpec.of(PartitionField("p", "CAST(id % 24 AS INT)"))
+    src = spark.range(2000).select("id", (F.col("id") * 3).alias("v"))
+    drifted = src.withColumn("v", F.col("v") + (F.col("id") % 24 == 3).cast("bigint"))
+    dest = str(tmp_path / "dest")
+
+    def jobs(group: str, df, copied: int) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            res = sync(spark, df, dest, spec)
+            assert len(res.rows) == 24 and res.copied_partitions == copied
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    tag = uuid.uuid4().hex
+    assert jobs(f"bootstrap-{tag}", src, 24) <= 3
+    assert jobs(f"resync-{tag}", drifted, 1) <= 7
