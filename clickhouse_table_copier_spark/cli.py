@@ -36,12 +36,11 @@ def _run(mode: str, config_path: str, explain: bool = False) -> int:
     spark = get_spark(app_name=f"ctc-spark-{mode}")
 
     # ClickHouse dialect in-session: a reference config's partition_by
-    # expressions (toYYYYMM(date), intDiv(key, N), …) evaluate verbatim
-    from clickhouse_table_copier_spark.functions.ch_dialect import (
-        register_clickhouse_functions,
-    )
+    # expressions (toYYYYMM(date), intDiv(key, N), …) evaluate verbatim.
+    # Only the shims they call are registered (each costs a SQL statement).
+    from clickhouse_table_copier_spark.functions.ch_dialect import register_used_functions
 
-    register_clickhouse_functions(spark)
+    register_used_functions(spark, [f.expr for f in spec.fields])
 
     def ref(ep) -> TableRef:
         return TableRef(location=ep.location, fmt=ep.format, table=ep.table, options=ep.options)

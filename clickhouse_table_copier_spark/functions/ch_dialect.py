@@ -25,6 +25,8 @@ Semantics notes (each matches the §1.3 cast matrix / SURVEY §2.6 policy):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import SparkSession
 
 ZERO_UUID = "00000000-0000-0000-0000-000000000000"
@@ -209,3 +211,15 @@ def register_clickhouse_functions(spark: SparkSession) -> list[str]:
     for name, body in _FUNCTIONS:
         spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{body}")
     return [n for n, _ in _FUNCTIONS]
+
+
+def register_used_functions(spark: SparkSession, exprs: list[str]) -> list[str]:
+    """Register only the shims the SQL texts ``exprs`` call (``name(``,
+    case-insensitive as Spark resolves functions); returns their names. No
+    shim body calls another shim, and a name listed twice in ``_FUNCTIONS``
+    keeps its last body, as after a full registration."""
+    text = "\n".join(exprs)
+    used = {n: b for n, b in dict(_FUNCTIONS).items() if re.search(rf"\b{n}`?\s*\(", text, re.I)}
+    for name, body in used.items():
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{body}")
+    return list(used)

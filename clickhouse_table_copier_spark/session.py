@@ -50,6 +50,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Listing more than 32 partition directories runs a Spark job of one
+        # task per directory (default cap 10000); tasks beyond the cores only
+        # queue, each paying scheduling and Hadoop-conf deserialization.
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -18,6 +18,7 @@ work proportional to the delta, not the table.
 
 from __future__ import annotations
 
+from contextlib import closing
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +35,13 @@ class ContinuousSyncResult:
     sync_result: SyncResult | None  # None when nothing changed
 
 
+def _marker(spark: SparkSession, staging_dir: str):
+    """The ledger's "repaired through batch N" file and its file system;
+    Spark's reads of the ledger skip ``_`` files."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(staging_dir, "_repaired_through")
+    return path, path.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def _touched_partitions(
     spark: SparkSession,
     source_dir: str,
@@ -41,21 +49,13 @@ def _touched_partitions(
     spec: PartitionSpec,
     checkpoint_dir: str,
     staging_dir: str,
-) -> list:
-    """Partition values present in files added since the last run."""
+) -> tuple[list, int]:
+    """Partition values of the staged batches no sync has repaired yet,
+    after staging the files added since the last run; and the last staged
+    batch id."""
     # stateless: per micro-batch, record the DISTINCT partition keys of the
     # new rows (no streaming aggregation state — 'complete'/'update' modes
     # would re-emit or accumulate history)
-    try:
-        prev_max = (
-            spark.read.parquet(staging_dir)
-            .agg(F.max("batch_id").alias("b"))
-            .collect()[0]["b"]
-        )
-        prev_max = -1 if prev_max is None else prev_max
-    except Exception:
-        prev_max = -1
-
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "128")
@@ -79,14 +79,20 @@ def _touched_partitions(
     try:
         staged = spark.read.parquet(staging_dir)
     except Exception:
-        return []  # no batches ever written
+        return [], -1  # no batches ever written
+    path, fs = _marker(spark, staging_dir)
+    repaired = -1
+    if fs.exists(path):
+        with closing(fs.open(path)) as f:
+            repaired = f.readLong()
     rows = (
-        staged.where(F.col("batch_id") > prev_max)
-        .select(*spec.names)
-        .distinct()
+        staged.where(F.col("batch_id") > repaired)
+        .groupBy(*spec.names)
+        .agg(F.max("batch_id").alias("batch_id"))
         .collect()
     )
-    return [tuple(r[n] for n in spec.names) for r in rows]
+    through = max((r["batch_id"] for r in rows), default=-1)
+    return [tuple(r[n] for n in spec.names) for r in rows], through
 
 
 def incremental_sync(
@@ -105,8 +111,12 @@ def incremental_sync(
     before sync — pruning both the fingerprint pass and the write. A
     never-before-seen checkpoint (first run) touches everything, which
     degenerates to a plain full sync: correct bootstrap behavior.
+
+    The ledger records the repair only after ``sync`` returns, and never
+    on a dry run: partitions staged by a run whose repair crashed, or was
+    a dry run, are touched again by the next run.
     """
-    touched = _touched_partitions(
+    touched, through = _touched_partitions(
         spark, source_dir, schema, spec, checkpoint_dir, staging_dir
     )
     if not touched:
@@ -120,4 +130,8 @@ def incremental_sync(
     if derived:
         pruned = pruned.drop(*derived)
     result = sync(spark, pruned, dest_path, spec, options)
+    if not options.dry_run:
+        path, fs = _marker(spark, staging_dir)
+        with closing(fs.create(path, True)) as f:
+            f.writeLong(through)
     return ContinuousSyncResult(touched_partitions=touched, sync_result=result)

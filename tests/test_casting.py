@@ -262,6 +262,26 @@ def test_ipv4_roundtrip_matches_stdlib(spark):
         assert r["parsed"] == r["n"], (r["s"], r["parsed"], r["n"])
 
 
+def test_register_used_functions_only_called_shims(spark):
+    """The CLI registers only the shims its partition expressions call,
+    nested or in any case, and none for a key that calls no shim."""
+    from clickhouse_table_copier_spark.functions.ch_dialect import (
+        _FUNCTIONS,
+        register_used_functions,
+    )
+
+    s = spark.newSession()  # its own temporary functions
+    names = register_used_functions(s, ["TOYYYYMM(toDate(x))", "intDiv(a, 3)"])
+    assert sorted(names) == ["intDiv", "toDate", "toYYYYMM"]
+    row = s.sql("SELECT toyyyymm(TODATE('2026-02-15')) AS ym, INTDIV(7, 3) AS d").first()
+    assert (row["ym"], row["d"]) == (202602, 2)
+    with pytest.raises(Exception, match="UNRESOLVED_ROUTINE"):
+        s.sql("SELECT toInt32(1)")
+    assert register_used_functions(s, ["CAST(date_format(l_shipdate, 'yyyyMM') AS INT)"]) == []
+    # complete: no shim body calls another shim
+    assert [n for n, body in _FUNCTIONS if register_used_functions(s, [body])] == []
+
+
 def test_clickhouse_dialect_partition_key_functions(spark):
     """toYYYYMM / toStartOfMonth / intDiv — the expressions ClickHouse
     configs PARTITION BY — usable directly in a PartitionSpec expr, so a

@@ -161,22 +161,79 @@ def test_timestamp_ntz_key_resyncs(spark, tmp_path):
 def test_sync_job_counts(spark, tmp_path):
     """Spark jobs for one bootstrap and one resync, each followed by the
     report read the CLI prints. The report is collected once and the key
-    lists come from those rows, so neither count may grow back."""
-    sc = spark.sparkContext
-    spec = PartitionSpec.of(PartitionField("p", "CAST(id % 24 AS INT)"))
-    src = spark.range(2000).select("id", (F.col("id") * 3).alias("v"))
-    drifted = src.withColumn("v", F.col("v") + (F.col("id") % 24 == 3).cast("bigint"))
+    lists come from those rows, so neither count may grow back. Above 32
+    partition directories Spark lists the destination in a job of its own,
+    which runs at most one task per core."""
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def listing(job: int) -> bool:
+        desc = sc._jsc.sc().statusStore().job(job).description()
+        return desc.isDefined() and desc.get().startswith("Listing leaf files")
+
+    for parts in (24, 40):
+        spec = PartitionSpec.of(PartitionField("p", f"CAST(id % {parts} AS INT)"))
+        src = spark.range(2000).select("id", (F.col("id") * 3).alias("v"))
+        drifted = src.withColumn("v", F.col("v") + (F.col("id") % parts == 3).cast("bigint"))
+        dest = str(tmp_path / f"dest{parts}")
+
+        def jobs(group: str, df, copied: int) -> list[int]:
+            sc.setJobGroup(group, group)
+            try:
+                res = sync(spark, df, dest, spec)
+                assert len(res.rows) == parts and res.copied_partitions == copied
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return tracker.getJobIdsForGroup(group)
+
+        tag = uuid.uuid4().hex
+        assert len(jobs(f"bootstrap-{tag}", src, parts)) <= 3
+        resync = jobs(f"resync-{tag}", drifted, 1)
+        listed = [j for j in resync if listing(j)]
+        assert len(resync) - len(listed) <= 7 and len(listed) == (parts > 32)
+        assert all(tracker.getStageInfo(s).numTasks <= cap for j in listed for s in tracker.getJobInfo(j).stageIds)
+
+
+def test_cli_sync_registers_called_clickhouse_functions(spark, tmp_path, monkeypatch):
+    """`cli sync` in-process with a ClickHouse partition expression: the
+    shim it calls is registered and the partitions are written."""
+    from clickhouse_table_copier_spark import cli
+
+    # the CLI's get_spark reapplies its defaults to this session
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", spark.conf.get("spark.sql.shuffle.partitions"))
+    days = [datetime.date(2026, 1, 15), datetime.date(2026, 2, 3), datetime.date(2026, 2, 4)]
+    spark.createDataFrame(list(enumerate(days)), "id BIGINT, l_shipdate DATE").write.parquet(str(tmp_path / "src"))
+    cfg = tmp_path / "job.yaml"
+    cfg.write_text(
+        f"source:\n  location: {tmp_path / 'src'}\n"
+        f"destination:\n  location: {tmp_path / 'dest'}\n"
+        "partition_by:\n  - name: ym\n    expr: toYYYYMM(CAST(l_shipdate AS DATE))\n"
+    )
+    assert cli.main(["sync", "--config", str(cfg)]) == 0
+    assert {d for d in os.listdir(tmp_path / "dest") if d.startswith("ym=")} == {"ym=202601", "ym=202602"}
+
+
+def test_incremental_sync_retries_an_unfinished_repair(spark, tmp_path, monkeypatch):
+    """Partitions staged by a run whose repair crashed, or was a dry run,
+    are touched again by the next run, which converges."""
+    from clickhouse_table_copier_spark.streaming import continuous_sync as cs
+
+    src = spark.createDataFrame([(1, "a", 10), (2, "b", 20), (3, "b", 30)], "id BIGINT, k STRING, v BIGINT")
+    src.write.parquet(str(tmp_path / "src"))
     dest = str(tmp_path / "dest")
+    args = (spark, str(tmp_path / "src"), src.schema, dest, SPEC, str(tmp_path / "ck"), str(tmp_path / "stage"))
 
-    def jobs(group: str, df, copied: int) -> int:
-        sc.setJobGroup(group, group)
-        try:
-            res = sync(spark, df, dest, spec)
-            assert len(res.rows) == 24 and res.copied_partitions == copied
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+    def crash(*a, **kw):
+        raise RuntimeError("injected")
 
-    tag = uuid.uuid4().hex
-    assert jobs(f"bootstrap-{tag}", src, 24) <= 3
-    assert jobs(f"resync-{tag}", drifted, 1) <= 7
+    with monkeypatch.context() as m:
+        m.setattr(cs, "sync", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            cs.incremental_sync(*args)
+    dry = cs.incremental_sync(*args, SyncOptions(dry_run=True))
+    assert sorted(dry.touched_partitions) == [("a",), ("b",)]
+    res = cs.incremental_sync(*args)
+    assert sorted(res.touched_partitions) == [("a",), ("b",)]
+    assert res.sync_result.copied_partitions == 2
+    assert _fingerprints(spark.read.parquet(dest)) == _fingerprints(src)
+    assert cs.incremental_sync(*args).touched_partitions == []
