@@ -17,9 +17,10 @@ from __future__ import annotations
 
 import argparse
 import sys
+from dataclasses import replace
 
 from clickhouse_table_copier_spark import __version__
-from clickhouse_table_copier_spark.config import ConfigError, read_config, to_partition_spec
+from clickhouse_table_copier_spark.config import ConfigError, read_config
 
 EXIT_OK = 0
 EXIT_ERROR = 1
@@ -27,12 +28,12 @@ EXIT_INCONSISTENT = 2
 
 
 def _run(mode: str, config_path: str, explain: bool = False) -> int:
-    from clickhouse_table_copier_spark.operators.sync import SyncOptions, sync
+    from clickhouse_table_copier_spark.operators.sync import sync
     from clickhouse_table_copier_spark.session import get_spark
-    from clickhouse_table_copier_spark.sources.table import TableRef, load_table
+    from clickhouse_table_copier_spark.sources.table import load_table
 
     job = read_config(config_path)
-    spec = to_partition_spec(job)
+    spec = job.spec
     spark = get_spark(app_name=f"ctc-spark-{mode}")
 
     # ClickHouse dialect in-session: a reference config's partition_by
@@ -42,16 +43,8 @@ def _run(mode: str, config_path: str, explain: bool = False) -> int:
 
     register_used_functions(spark, [f.expr for f in spec.fields])
 
-    def ref(ep) -> TableRef:
-        return TableRef(location=ep.location, fmt=ep.format, table=ep.table, options=ep.options)
-
-    src = load_table(spark, ref(job.source))
-    options = SyncOptions(
-        check_hashes=job.check_hashes,
-        skip_delete=job.skip_delete,
-        skip_reimport=job.skip_reimport,
-        dry_run=(mode == "info"),
-    )
+    src = load_table(spark, job.source)
+    options = replace(job.options, dry_run=(mode == "info"))
     if job.use_virtual_column and mode == "info":
         # C7: _part-granularity reporting — per physical file of the source
         # (copy/copy.go:207-211 → _metadata.file_path)
@@ -65,7 +58,7 @@ def _run(mode: str, config_path: str, explain: bool = False) -> int:
                 f"rows={r['rows']} fingerprint={r['fingerprint']}"
             )
 
-    result = sync(spark, src, ref(job.destination), spec, options, semantic=job.semantic_casts)
+    result = sync(spark, src, job.destination, spec, options, semantic=job.semantic_casts)
     if explain:
         # the working version of the reference's dead --debug flag
         # (main.go:52, "doesnt work"): show the physical plan the engine

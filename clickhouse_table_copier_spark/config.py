@@ -1,4 +1,4 @@
-"""Job-spec config (SURVEY §2.1 S7, §2.9 C2): YAML → validated dataclasses.
+"""Job-spec config (SURVEY §2.1 S7, §2.9 C2): YAML → the types sync runs on.
 
 The reference reads a YAML config with source/destination endpoints and
 four behavior flags (``/root/reference/config/config.go:29-38``), validating
@@ -7,11 +7,20 @@ at ``main.go:89-92``). The engine's spec replaces host/db/table with
 storage locations (parquet path or JDBC URL) and keeps the same flags —
 including fixing the reference's ``config.yaml:28`` ``fasle`` typo class of
 errors by actually parsing booleans strictly.
+
+Like the reference's config feeding its copier's table settings
+(``database.go:42-50``), each YAML section maps straight onto the type the
+engine uses: endpoints → :class:`TableRef`, ``partition_by`` →
+:class:`PartitionSpec`, the flags → :class:`SyncOptions`.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+
+from clickhouse_table_copier_spark.operators.sync import SyncOptions
+from clickhouse_table_copier_spark.plans.partition_spec import PartitionField, PartitionSpec
+from clickhouse_table_copier_spark.sources.table import TableRef
 
 try:
     import yaml
@@ -24,35 +33,15 @@ class ConfigError(ValueError):
 
 
 @dataclass(frozen=True)
-class EndpointSpec:
-    """One side of the sync: where a table lives."""
-
-    location: str
-    format: str = "parquet"
-    table: str | None = None
-    options: dict = field(default_factory=dict)
-
-
-@dataclass(frozen=True)
-class PartitionKeySpec:
-    name: str
-    expr: str | None = None  # defaults to bare column
-    source_col: str | None = None
-    is_temporal: bool = False
-
-
-@dataclass(frozen=True)
 class JobSpec:
-    source: EndpointSpec
-    destination: EndpointSpec
-    partition_by: tuple[PartitionKeySpec, ...]
+    source: TableRef
+    destination: TableRef
+    spec: PartitionSpec
+    options: SyncOptions = SyncOptions()  # config.go:34-36; dry_run is the CLI mode's
     # column -> ClickHouse semantic type name ('UUID'|'IPv4'|'IPv6'|'JSON');
     # requests the canonicalizing casts plain Spark types can't encode
     # (sidefunctions.go:127-134)
     semantic_casts: dict = field(default_factory=dict)
-    check_hashes: bool = True  # config.go:34
-    skip_delete: bool = False  # config.go:35
-    skip_reimport: bool = False  # config.go:36
     use_virtual_column: bool = False  # config.go:37
 
 
@@ -70,12 +59,24 @@ def _bool(d: dict, key: str, default: bool) -> bool:
     raise ConfigError(f"config key {key} must be a boolean, got {v!r}")
 
 
-def _endpoint(d: dict, ctx: str) -> EndpointSpec:
-    return EndpointSpec(
+def _endpoint(d: dict, ctx: str) -> TableRef:
+    return TableRef(
         location=_require(d, "location", ctx),
-        format=d.get("format", "parquet"),
+        fmt=d.get("format", "parquet"),
         table=d.get("table"),
         options=d.get("options", {}) or {},
+    )
+
+
+def _field(item) -> PartitionField:
+    if isinstance(item, str):
+        return PartitionField(item, item)
+    name = _require(item, "name", "partition_by[]")
+    return PartitionField(
+        name=name,
+        expr=item.get("expr") or name,  # defaults to the bare column
+        source_col=item.get("source_col"),
+        is_temporal=bool(item.get("is_temporal", False)),
     )
 
 
@@ -86,21 +87,9 @@ def parse_job_spec(data: dict) -> JobSpec:
     src = _endpoint(dict(_require(data, "source", "root")), "source")
     dest = _endpoint(dict(_require(data, "destination", "root")), "destination")
     pb_raw = _require(data, "partition_by", "root")
-    if isinstance(pb_raw, (str,)):
+    if isinstance(pb_raw, str):
         pb_raw = [pb_raw]
-    keys = []
-    for item in pb_raw:
-        if isinstance(item, str):
-            keys.append(PartitionKeySpec(name=item))
-        else:
-            keys.append(
-                PartitionKeySpec(
-                    name=_require(item, "name", "partition_by[]"),
-                    expr=item.get("expr"),
-                    source_col=item.get("source_col"),
-                    is_temporal=bool(item.get("is_temporal", False)),
-                )
-            )
+    spec = PartitionSpec(tuple(_field(item) for item in pb_raw))
     semantic = data.get("semantic_casts", {}) or {}
     allowed = {"UUID", "IPv4", "IPv6", "JSON"}
     for col, t in semantic.items():
@@ -111,11 +100,13 @@ def parse_job_spec(data: dict) -> JobSpec:
     return JobSpec(
         source=src,
         destination=dest,
-        partition_by=tuple(keys),
+        spec=spec,
+        options=SyncOptions(
+            check_hashes=_bool(data, "check_hashes", True),
+            skip_delete=_bool(data, "skip_delete", False),
+            skip_reimport=_bool(data, "skip_reimport", False),
+        ),
         semantic_casts=dict(semantic),
-        check_hashes=_bool(data, "check_hashes", True),
-        skip_delete=_bool(data, "skip_delete", False),
-        skip_reimport=_bool(data, "skip_reimport", False),
         use_virtual_column=_bool(data, "use_virtual_column", False),
     )
 
@@ -126,22 +117,3 @@ def read_config(path: str) -> JobSpec:
         raise ConfigError("pyyaml not available; pass a dict to parse_job_spec")
     with open(path) as f:
         return parse_job_spec(yaml.safe_load(f))
-
-
-def to_partition_spec(job: JobSpec):
-    from clickhouse_table_copier_spark.plans.partition_spec import (
-        PartitionField,
-        PartitionSpec,
-    )
-
-    return PartitionSpec(
-        tuple(
-            PartitionField(
-                name=k.name,
-                expr=k.expr or k.name,
-                source_col=k.source_col,
-                is_temporal=k.is_temporal,
-            )
-            for k in job.partition_by
-        )
-    )

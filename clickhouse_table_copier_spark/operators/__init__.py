@@ -1,8 +1,1 @@
 """Executable DataFrame pipelines: the engine's operator layer."""
-
-from clickhouse_table_copier_spark.operators.fingerprint import (  # noqa: F401
-    partition_fingerprints,
-    table_fingerprint,
-)
-from clickhouse_table_copier_spark.operators.partition_stats import partition_stats  # noqa: F401
-from clickhouse_table_copier_spark.operators.diff import diff_partitions, Verdict  # noqa: F401

@@ -258,10 +258,19 @@ def weighted_quantiles(
 
     Output: one row per group with one column per quantile label.
     Weights must be positive integers; ``group_col`` cardinality must be
-    metadata-sized (the target-bucket frame is broadcast).
+    metadata-sized (the target-bucket frame is broadcast). Labels are
+    spliced into SQL string literals and must not contain ``'``. The
+    integer comparisons run in ``decimal(38,0)``, where a product
+    ``num · W`` or ``den · W`` at or above ``10^38`` would overflow to
+    NULL and silently drop a candidate bucket, so the input is rejected
+    unless ``max(num, den)`` times the total weight of ALL rows (a bound
+    on every group's ``W``) stays below ``10^38``.
     """
     from pyspark.sql import Window
 
+    quoted = [label for label, _, _ in quantiles if "'" in label]
+    if quoted:
+        raise ValueError(f"weighted_quantiles: quantile labels must not contain \"'\": {quoted}")
     vw0 = (
         df.groupBy(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
         .agg(F.sum(F.col(weight_col).cast("decimal(38,0)")).alias("w"))
@@ -271,11 +280,14 @@ def weighted_quantiles(
     pcts = ",".join(repr(i / parts) for i in range(1, parts))
     # precondition checks ride on the bounds action (zero extra jobs):
     # NULL values break cross-engine rank order, non-positive collapsed
-    # weights break the integer threshold inequality
+    # weights break the integer threshold inequality, and a total weight
+    # that overflows it (try_sum is NULL on overflow) drops buckets
     chk = vw0.select(
         F.expr(f"percentile_approx(v, array({pcts}), 1000)").alias("bs"),
         F.expr("sum(if(v is null, 1, 0))").alias("null_v"),
         F.expr("sum(if(w is null or w <= 0, 1, 0))").alias("bad_w"),
+        F.expr("count(1)").alias("n"),
+        F.expr("try_sum(w)").alias("total_w"),
     ).collect()[0]
     if int(chk["null_v"] or 0) or int(chk["bad_w"] or 0):
         raise ValueError(
@@ -283,6 +295,12 @@ def weighted_quantiles(
             f"{chk['bad_w']} non-positive collapsed weights in "
             f"({value_col!r}, {weight_col!r}) — the exact integer "
             "threshold needs non-null values and positive weights"
+        )
+    scale = max(max(num, den) for _, num, den in quantiles)
+    if chk["n"] and (chk["total_w"] is None or int(chk["total_w"]) * scale >= 10**38):
+        raise ValueError(
+            f"weighted_quantiles: total weight {chk['total_w']} of "
+            f"{weight_col!r} times {scale} reaches decimal(38,0)'s 10^38 bound"
         )
     raw = chk["bs"]
     bounds = sorted({float(b) for b in (raw or []) if b is not None})

@@ -10,13 +10,14 @@ partition — probe the destination, compare fingerprints, then delete
 One pipeline serves both kinds of destination, a hive-partitioned parquet
 directory and a JDBC table:
 
-1. Probe whether the destination exists.
+1. Probe whether the destination exists (``sources.catalog.table_exists``).
 2. Build the per-partition report. An absent destination makes every
    source partition a ``copy``, counted from the source. Otherwise the
-   destination is loaded, its columns matched to the source's by name
-   (case-insensitively: Derby/Oracle fold identifiers to upper case), the
-   source cast to the destination's types, and ``diff_partitions``
-   classifies every partition in one grouped pass per side.
+   destination is loaded, the source projected onto its columns by
+   ``plans.casting.align`` (matched by name case-insensitively: Derby/
+   Oracle fold identifiers to upper case; cast to the destination's
+   types), and ``diff_partitions`` classifies every partition in one
+   grouped pass per side.
 3. Derive each partition's ``action`` from its verdict and the flags.
 4. A dry run returns that report uncollected — the reference's
    Info()/Copy() split (copy/copy.go:12 vs :139).
@@ -53,7 +54,9 @@ from pyspark.sql import functions as F
 
 from clickhouse_table_copier_spark.operators import sync_jdbc
 from clickhouse_table_copier_spark.operators.diff import Verdict, diff_partitions
+from clickhouse_table_copier_spark.plans.casting import align, apply_semantic
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
+from clickhouse_table_copier_spark.sources.catalog import table_exists
 from clickhouse_table_copier_spark.sources.table import TableRef, load_table
 
 
@@ -97,12 +100,6 @@ def where_keys(df: DataFrame, names: list[str], keys: list[tuple]) -> DataFrame:
             [F.struct(*[_literal(v, types[n]).alias(n) for n, v in zip(names, k)]) for k in keys]
         )
     )
-
-
-def _dest_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
 def _delete_partition_dirs(
@@ -171,19 +168,11 @@ def sync(
         dest = TableRef(location=dest)
     if dest.fmt not in ("parquet", "jdbc"):
         raise ValueError("sync destination must be a parquet path or a jdbc endpoint")
-    jdbc = dest.fmt == "jdbc"
-    if semantic:
-        from clickhouse_table_copier_spark.plans.casting import apply_semantic
-
-        src = apply_semantic(src, semantic)
+    src = apply_semantic(src, semantic)
     names = spec.names
     src_parts = spec.with_partition_columns(src)
 
-    if jdbc:
-        exists = sync_jdbc._jdbc_table_exists(spark, dest)
-    else:
-        exists = _dest_exists(spark, dest.location)
-    if not exists:
+    if not table_exists(spark, dest):
         # Destination absent → everything is a 'copy' (copy.go:262-266).
         write = src_parts
         report = (
@@ -194,24 +183,18 @@ def sync(
         )
     else:
         dest_df = load_table(spark, dest)
-        by_lower = {c.lower(): c for c in dest_df.columns}
-        missing = [n for n in names if n.lower() not in by_lower]
-        if missing:
-            raise ValueError(f"dest table lacks partition columns: {missing}")
-        common = [c for c in src.columns if c not in names and c.lower() in by_lower]
-        src_types = dict(src_parts.dtypes)
-        dest_norm = dest_df.select(
-            *[F.col(by_lower[n.lower()]).cast(src_types[n]).alias(n) for n in names],
-            *[F.col(by_lower[c.lower()]).alias(c) for c in common],
-        )
-        dest_types = dict(dest_norm.dtypes)
         # What is compared is what gets WRITTEN — the reference's S6
         # insert: the common columns cast to the DESTINATION's types
         # (INSERT INTO dest (cols) SELECT castExprs, database.go:486-507).
         # Source-only columns are not copied; dest-only columns are absent
         # from rewritten partitions (readers see NULLs via schema merging).
-        write = src_parts.select(
-            *names, *[F.col(c).cast(dest_types[c]).alias(c) for c in common]
+        write = align(src_parts, dest_df, keys=names)
+        common = write.columns[len(names):]
+        by_lower = {c.lower(): c for c in dest_df.columns}
+        src_types = dict(src_parts.dtypes)
+        dest_norm = dest_df.select(
+            *[F.col(by_lower[n.lower()]).cast(src_types[n]).alias(n) for n in names],
+            *[F.col(by_lower[c.lower()]).alias(c) for c in common],
         )
         report = diff_partitions(
             write, dest_norm, PartitionSpec.bare(*names),
@@ -243,7 +226,7 @@ def sync(
     if len(keys["written"]) < len(rows):  # else all is written: no filter
         write = where_keys(write, names, keys["written"])
 
-    apply = sync_jdbc.apply if jdbc else _apply_parquet
+    apply = sync_jdbc.apply if dest.fmt == "jdbc" else _apply_parquet
     removed = set(apply(spark, dest, write, names, keys))
     # never report a delete that did not happen
     rows = [

@@ -15,18 +15,18 @@ The delete-then-insert window is visible to concurrent readers — exactly
 the reference's semantics, and why both verify with fingerprints on the
 next run rather than assuming atomicity.
 
-Also here: the WHERE rendering with per-dialect string escaping, the
-driver-side statement runner, and the SQLState-based existence probe.
+Also here: the WHERE rendering with per-dialect string escaping. The
+statement runner is ``sources.table.jdbc_execute``; whether the table
+exists is decided by ``sources.catalog.table_exists``.
 """
 
 from __future__ import annotations
 
 import datetime
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from clickhouse_table_copier_spark.sources.table import TableRef, jdbc_retry_policy, write_table
+from clickhouse_table_copier_spark.sources.table import TableRef, jdbc_execute, write_table
 
 # Dialects whose string literals treat backslash as an escape character by
 # default (ClickHouse — the reference's native target — and MySQL family).
@@ -77,74 +77,6 @@ def sql_equality_where(
     return " OR ".join(one(r) for r in rows)
 
 
-def _jdbc_execute(spark: SparkSession, ref: TableRef, sql: str) -> None:
-    """Driver-side statement on the destination server (the reference's
-    control-plane connection; data never flows through it)."""
-    jvm = spark._jvm
-    driver = ref.options.get("driver")
-    if driver:
-        jvm.java.lang.Class.forName(driver)
-    props = jvm.java.util.Properties()
-    for k in ("user", "password"):
-        if k in ref.options:
-            props.setProperty(k, str(ref.options[k]))
-    conn = jvm.java.sql.DriverManager.getConnection(ref.location, props)
-    try:
-        st = conn.createStatement()
-        # execute(), not executeUpdate(): the exists-probe is a SELECT and
-        # JDBC drivers reject executeUpdate for result-returning statements
-        st.execute(sql)
-        st.close()
-    finally:
-        conn.close()
-
-
-# SQLStates that mean "that table does not exist" — Derby 42X05,
-# SQL-Server/MySQL-family 42S02, Postgres 42P01, ODBC S0002, DB2 42704.
-# Anything else (connection refused, auth failure, timeout) is NOT
-# evidence of absence: treating it as missing would route sync into the
-# dest-absent branch, which writes every source partition again on top of
-# the rows already there — duplicating the table on a transient blip.
-_TABLE_MISSING_SQLSTATES = frozenset({"42X05", "42S02", "42P01", "S0002", "42704"})
-
-
-def _sql_states(exc: Exception) -> list[str]:
-    """SQLState codes along the Java cause chain of a py4j error."""
-    states: list[str] = []
-    je = getattr(exc, "java_exception", None)
-    while je is not None:
-        try:
-            st = je.getSQLState()
-            if st:
-                states.append(str(st).upper())
-        except Exception:
-            pass  # not a java.sql.SQLException — keep walking the chain
-        try:
-            je = je.getCause()
-        except Exception:
-            break
-    return states
-
-
-def _jdbc_table_exists(spark: SparkSession, ref: TableRef) -> bool:
-    """Existence probe (S5 parity, database.go:344). Only a table-missing
-    SQLState returns False; connection-class failures retry under the C9
-    knobs (``connect_retries``/``retry_delay_s``) and then re-raise."""
-    retries, delay = jdbc_retry_policy(ref)
-    attempt = 0
-    while True:
-        try:
-            _jdbc_execute(spark, ref, f"SELECT 1 FROM {ref.table} WHERE 1=0")
-            return True
-        except Exception as e:
-            if any(s in _TABLE_MISSING_SQLSTATES for s in _sql_states(e)):
-                return False
-            if 0 <= retries <= attempt:
-                raise
-            attempt += 1
-            time.sleep(delay)
-
-
 def apply(
     spark: SparkSession, ref: TableRef, write: DataFrame, names: list[str], keys: dict
 ) -> list[tuple]:
@@ -155,7 +87,7 @@ def apply(
         where = sql_equality_where(
             names, doomed, backslash_escapes=dialect_backslash_escapes(ref.location)
         )
-        _jdbc_execute(spark, ref, f"DELETE FROM {ref.table} WHERE {where}")
+        jdbc_execute(spark, ref, f"DELETE FROM {ref.table} WHERE {where}")
     # D2: one distributed append of everything needing data (creates the
     # table when the destination was absent)
     if keys["written"]:

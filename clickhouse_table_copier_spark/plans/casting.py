@@ -8,16 +8,14 @@ types differ (``ReturnDestValues``, ``sidefunctions.go:112-192``).
 
 This module is the typed Spark replacement. The ClickHouse-type → Spark-type
 mapping (§1.3) is carried as a table so job specs may still *name* CH types;
-the cast planner itself works on Spark types (whatever the source/dest
-DataFrames actually carry) and produces Column expressions — all JVM-side,
+:func:`align`, the projection ``sync`` compares and writes, works on Spark
+types (whatever the source/dest DataFrames actually carry) — all JVM-side,
 codegen-eligible casts.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,71 +83,12 @@ def common_columns(src: DataFrame, dest: DataFrame) -> list[str]:
     return [c for c in src.columns if c in dest_set]
 
 
-@dataclass(frozen=True)
-class CastStep:
-    """One column of the cast plan: source column → destination type."""
-
-    name: str
-    src_type: T.DataType
-    dest_type: T.DataType
-
-    def expr(self) -> Column:
-        return _cast_expr(F.col(self.name), self.src_type, self.dest_type).alias(self.name)
-
-
-def _cast_expr(c: Column, src: T.DataType, dest: T.DataType) -> Column:
-    """Cast expression for one column — ReturnDestValues' matrix, typed.
-
-    Identical types pass through (sidefunctions.go:120-123's fallthrough);
-    otherwise a Spark cast, with the special canonicalizers standing in for
-    toUUIDOrZero / toIPv4 / toIPv6 / toJSONString.
-    """
-    if src == dest:
-        return c
-    # String-typed semantic targets (UUID/IPv6/JSON carry metadata via the
-    # planner, not the type system, so callers use the dedicated helpers;
-    # plain type mismatches get a standard cast).
-    return c.cast(dest)
-
-
 # Semantic casts a job spec can request by CH type name on the destination.
 _SEMANTIC_CASTS = {
     "UUID": to_uuid_or_zero,
     "IPv4": ipv4_to_long,
     "IPv6": canonical_ipv6,
 }
-
-
-def cast_plan(
-    src: DataFrame,
-    dest: DataFrame,
-    semantic: dict[str, str] | None = None,
-) -> list[Column]:
-    """P2: projection list aligning src rows to dest's column types.
-
-    One expression per common column (source order); columns whose Spark
-    types already match pass through untouched. ``semantic`` optionally maps
-    column name → ClickHouse type name ('UUID'/'IPv4'/'IPv6'/'JSON') to
-    request the canonicalizing casts that plain Spark types can't encode.
-    """
-    src_types = dict(zip(src.columns, [f.dataType for f in src.schema.fields]))
-    dest_types = dict(zip(dest.columns, [f.dataType for f in dest.schema.fields]))
-    exprs: list[Column] = []
-    for name in common_columns(src, dest):
-        sem = (semantic or {}).get(name)
-        if sem is not None:
-            if sem == "JSON":
-                col = (
-                    F.col(name)
-                    if isinstance(src_types[name], T.StringType)
-                    else to_json_string(F.col(name))
-                )
-            else:
-                col = _SEMANTIC_CASTS[sem](F.col(name))
-            exprs.append(col.alias(name))
-        else:
-            exprs.append(CastStep(name, src_types[name], dest_types[name]).expr())
-    return exprs
 
 
 def apply_semantic(df: DataFrame, semantic: dict[str, str] | None) -> DataFrame:
@@ -170,11 +109,36 @@ def apply_semantic(df: DataFrame, semantic: dict[str, str] | None) -> DataFrame:
     return out
 
 
-def align(src: DataFrame, dest: DataFrame, semantic: dict[str, str] | None = None) -> DataFrame:
-    """Project src onto dest's common-column schema with casts applied.
+def align(
+    src: DataFrame,
+    dest: DataFrame,
+    semantic: dict[str, str] | None = None,
+    keys: list[str] | tuple[str, ...] = (),
+) -> DataFrame:
+    """Project src onto the columns it shares with dest, each cast to
+    dest's type — what sync compares and writes.
 
     This is the SELECT side of the reference's
     ``INSERT INTO dest (cols) SELECT castExprs FROM remote(…)``
-    (database.go:486-507) as one declarative projection.
+    (database.go:486-507) as one declarative projection. Names match
+    case-insensitively (Derby/Oracle fold identifiers to upper case) and
+    keep the source's spelling and order; source-only columns are
+    dropped. ``semantic`` canonicalizes columns first
+    (:func:`apply_semantic`), and the result is cast like any other
+    column. ``keys`` (partition columns) lead the projection in the
+    SOURCE's types and must exist in dest.
     """
-    return src.select(*cast_plan(src, dest, semantic))
+    by_lower = {c.lower(): c for c in dest.columns}
+    missing = [k for k in keys if k.lower() not in by_lower]
+    if missing:
+        raise ValueError(f"dest table lacks partition columns: {missing}")
+    src = apply_semantic(src, semantic)
+    dest_types = dict(dest.dtypes)
+    return src.select(
+        *keys,
+        *[
+            F.col(c).cast(dest_types[by_lower[c.lower()]]).alias(c)
+            for c in src.columns
+            if c not in keys and c.lower() in by_lower
+        ],
+    )

@@ -1,11 +1,10 @@
-"""Partition-key specification and partition-value parsing.
+"""Partition-key specification.
 
 The reference parses ClickHouse partition keys out of
 ``system.tables.partition_key`` text: bare column names
-(``/root/reference/database/sidefunctions.go:17-32``), raw
-function-of-column expressions like ``toYYYYMM(ts)`` (``:34-50``), and it
-tokenizes *tuple* partition values like ``('2021-09-01', 42)`` with a regex
-(``:11-15``). A partition key may therefore be:
+(the reference's ``database/sidefunctions.go:17-32``) and raw
+function-of-column expressions like ``toYYYYMM(ts)`` (``:34-50``). A
+partition key may therefore be:
 
 - one or more bare columns                → equality predicates (P3)
 - a function of a Date/DateTime column    → time-range predicates (P4)
@@ -19,16 +18,10 @@ predicate side.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# Tokenizer for tuple partition values rendered as text, e.g.
-# "('2021-09-01', 42)" → ['2021-09-01', '42'].  Mirrors the intent of
-# RegexPartitionName (sidefunctions.go:11-15).
-_PARTITION_VALUE_TOKEN = re.compile(r"[A-Za-z0-9_:\.\- ]+")
 
 
 @dataclass(frozen=True)
@@ -82,13 +75,3 @@ class PartitionSpec:
             if f.expr != f.name or f.name not in df.columns:
                 out = out.withColumn(f.name, F.expr(f.expr))
         return out
-
-
-def parse_partition_value(text: str) -> list[str]:
-    """Tokenize a tuple partition value string → component values.
-
-    ``"('2021-09-01', 42)"`` → ``['2021-09-01', '42']``. Engine analogue of
-    RegexPartitionName (sidefunctions.go:11-15); kept for CLI/job-spec
-    compatibility where partition values arrive as text.
-    """
-    return [t.strip() for t in _PARTITION_VALUE_TOKEN.findall(text) if t.strip()]

@@ -60,27 +60,6 @@ def time_range_predicate(
     )
 
 
-def partition_predicate(
-    spec: PartitionSpec,
-    values: list,
-    bounds: dict[str, tuple] | None = None,
-) -> Column:
-    """Full GenerateWhere: per-field, range branch for temporal fields with
-    known bounds, equality otherwise; AND-joined across the tuple.
-
-    ``bounds`` maps field name → (min_time, max_time) when partition stats
-    recorded real bounds (A4 provides them).
-    """
-    preds: list[Column] = []
-    for f, v in zip(spec.fields, values):
-        b = (bounds or {}).get(f.name)
-        if f.is_temporal and b is not None and b[0] is not None and b[1] is not None:
-            preds.append(time_range_predicate(f, b[0], b[1]))
-        else:
-            preds.append(F.expr(f.expr).eqNullSafe(F.lit(v)))
-    return reduce(lambda a, b: a & b, preds)
-
-
 def virtual_column_predicate(part_file: str) -> Column:
     """P5: the ``WHERE _part='name'`` mode (copy/copy.go:207-211).
 

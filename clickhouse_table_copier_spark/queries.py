@@ -95,14 +95,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # returned DataFrame is an immutable logical plan, so handing the same
 # object to every caller changes nothing downstream — every action still
 # scans the parquet (no persist(), no materialization, NOT result
-# caching). Keyed per (application, dir, table); bounded like the
-# artifact caches.
+# caching). Keyed per (session, dir, table): a frame is bound to the
+# session that built it, and a ``newSession()`` shares the application
+# but not its confs; bounded like the artifact caches.
 _RELATION_CACHE: dict = {}
 _RELATION_CACHE_MAX = 64
 
 
 def _tc(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
+    key = (spark, sf_dir.rstrip("/"), name)
     df = _RELATION_CACHE.get(key)
     if df is None:
         df = _t(spark, sf_dir, name)
@@ -130,7 +131,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ts", F.expr(conv))
 
 
-# _events with the constructed frame memoized per (application, dir) —
+# _events with the constructed frame memoized per (session, dir) —
 # same rationale and same non-caching semantics as _tc above. The two
 # session confs _events sets are sticky on the session, so a memo hit
 # (necessarily preceded by the miss that set them) executes identically.
@@ -138,7 +139,7 @@ _EVENTS_FRAME_CACHE: dict = {}
 
 
 def _events_c(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
+    key = (spark, sf_dir.rstrip("/"))
     df = _EVENTS_FRAME_CACHE.get(key)
     if df is None:
         df = _events(spark, sf_dir)

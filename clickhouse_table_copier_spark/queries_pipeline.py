@@ -47,12 +47,12 @@ _CORPUS_FRAME_CACHE: dict = {}
 
 
 def _corpus_c(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_corpus with the constructed frame memoized per (application, dir)
+    """_corpus with the constructed frame memoized per (session, dir)
     — the same resolved-relation memo as queries._tc: the DataFrame is an
     immutable plan, every action still scans the parquet (no persist, NOT
     result caching).  Cuts the ~35 Py4J calls + ~0.2 s parquet-resolution
     _corpus pays per construction (guide §7.3)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
+    key = (spark, sf_dir.rstrip("/"))
     df = _CORPUS_FRAME_CACHE.get(key)
     if df is None:
         df = _corpus(spark, sf_dir)

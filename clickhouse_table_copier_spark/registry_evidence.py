@@ -10,25 +10,11 @@ is not a matter of judgment — it is derivable from committed evidence:
   row carries only a stale verification and must be fronted again.
 
 "Changed" is detected by fingerprinting: sha256 over the query function's
-source, its oracle SQL, and (v2, round-7 hardening) the source of the
-TRANSITIVE closure of same-package helper functions reachable by bare
-name, plus simple module-level constants at every level. v1 entries
-(one-level closure) keep verifying under v1 until their next green row
-migrates them — the `2:` prefix in ``registry_fingerprints.json`` marks
-the scheme an entry was recorded under.
-
-Migration soundness (round-8 hardening): while an entry is still v1, a
-deep-helper edit would be invisible to the v1 (shallow) closure, so
-``--update`` additionally stamps every remaining v1 entry with a
-TRANSITIONAL v2 baseline (`;2t:<hex>` suffix) computed at round start.
-That baseline is honest because at the moment it is recorded the whole
-registry is locally hash-verified against DuckDB at the same checkout
-(tests/test_oracle_queries.py), so "current deep closure" is exactly the
-closure whose behavior was just verified — by the driver for the shallow
-part, locally for the deep part. Any later deep-helper edit flips the
-transitional hash and fronts the query, closing the migration window the
-round-7 judge flagged (a `_cache_get` edit reached `dedup_minhash_lsh`
-via `_shared_jaccard_pairs` without tripping its v1 fingerprint).
+source, its oracle SQL, and the source of the TRANSITIVE closure of
+same-package helper functions reachable by bare name, plus simple
+module-level constants at every level. Snapshot entries carry a `2:`
+prefix (the scheme they were recorded under); an entry without it counts
+as unverified.
 
 ``registry_fingerprints.json`` (committed, same directory) records the
 fingerprint each query had **when its latest green driver row was
@@ -146,52 +132,14 @@ def _excluded_name(name: str) -> bool:
     return name in _EXCLUDED_GLOBALS or name.endswith(("_CACHE", "_CACHES"))
 
 
-def _helper_sources_v1(fn) -> dict[str, str]:
-    """Legacy (round ≤7) closure, one level deep: the SOURCE of
-    same-package functions fn references by name, plus the REPR of
-    simple module-level constants referenced by fn or those helpers.
-    Kept verbatim so snapshot entries recorded under v1 keep verifying
-    until their next green row migrates them to v2."""
-    out: dict[str, str] = {}
-    helpers: list = []
-    for name, obj in _candidate_objects(fn).items():
-        if _excluded_name(name):
-            continue
-        if (
-            inspect.isfunction(obj)
-            and obj is not fn
-            and (obj.__module__ or "").startswith(_PKG)
-        ):
-            try:
-                out[name] = inspect.getsource(obj)
-                helpers.append(obj)
-            except (OSError, TypeError):
-                pass
-        else:
-            r = _const_repr(obj)
-            if r is not None:
-                out[name] = r
-    for helper in helpers:
-        try:
-            for name, obj in _candidate_objects(helper).items():
-                if name in out or _excluded_name(name):
-                    continue
-                r = _const_repr(obj)
-                if r is not None:
-                    out[name] = r
-        except (OSError, TypeError):
-            pass
-    return out
-
-
 _DEEP_MAX_DEPTH = 6
 
 
 def _helper_sources_v2(fn) -> dict[str, str]:
     """TRANSITIVE dependency closure (round-7 hardening): BFS over
     same-package functions reachable by bare name, source-hashed at
-    EVERY level, plus const reprs at every level. Closes the v1
-    soundness hole where an edit to a helper-of-a-helper (observed:
+    EVERY level, plus const reprs at every level. Closes the one-level
+    closure's soundness hole where an edit to a helper-of-a-helper (observed:
     queries_pipeline._cache_get, reached only via _shared_jaccard_pairs)
     changed executed behavior without flagging any query stale. Depth
     is capped defensively; name collisions keep the first (nearest)
@@ -231,8 +179,8 @@ def _helper_sources_v2(fn) -> dict[str, str]:
     return out
 
 
-def query_fingerprint(fn, oracle: str | None, version: int = 2) -> str:
-    helpers = _helper_sources_v2(fn) if version >= 2 else _helper_sources_v1(fn)
+def query_fingerprint(fn, oracle: str | None) -> str:
+    helpers = _helper_sources_v2(fn)
     h = hashlib.sha256()
     h.update(inspect.getsource(fn).encode())
     h.update(b"\x00")
@@ -242,22 +190,10 @@ def query_fingerprint(fn, oracle: str | None, version: int = 2) -> str:
     return h.hexdigest()
 
 
-def _snap_version(entry: str) -> tuple[int, str, str | None]:
-    """Snapshot value formats:
-
-    * bare hex              — v1 (legacy), no transitional baseline
-    * ``<hex>;2t:<hex>``    — v1 verified + round-start transitional v2
-    * ``2:<hex>``           — v2 (deep closure) verified by a driver row
-
-    Returns (version, verified_hex, transitional_v2_hex_or_None).
-    """
-    trans = None
-    if ";2t:" in entry:
-        entry, trans = entry.split(";2t:", 1)
-    if ":" in entry:
-        v, hexd = entry.split(":", 1)
-        return int(v), hexd, trans
-    return 1, entry, trans
+def _snap_hex(entry: str) -> str | None:
+    """The fingerprint a snapshot entry ``2:<hex>`` records; None for any
+    other form, which counts as unverified."""
+    return entry[2:] if entry.startswith("2:") else None
 
 
 def _correctness_files() -> list[str]:
@@ -311,23 +247,14 @@ def must_front(queries: dict, oracles: dict[str, str]) -> dict[str, str]:
         if name not in green:
             need[name] = "no green driver row in any committed CORRECTNESS file"
             continue
-        if name not in snap:
+        stored = _snap_hex(snap.get(name, ""))
+        if stored is None:
             need[name] = "no verified fingerprint on record"
             continue
-        ver, stored, trans = _snap_version(snap[name])
-        fp = query_fingerprint(fn, oracles.get(name), version=ver)
-        if stored != fp:
+        if stored != query_fingerprint(fn, oracles.get(name)):
             need[name] = (
                 f"implementation/oracle changed since last green row (r{green[name]:02d})"
             )
-            continue
-        if ver < 2 and trans is not None:
-            fp2 = query_fingerprint(fn, oracles.get(name), version=2)
-            if trans != fp2:
-                need[name] = (
-                    "deep-helper closure changed since the round-start "
-                    f"transitional baseline (v1 row from r{green[name]:02d})"
-                )
     return need
 
 
@@ -422,23 +349,8 @@ def update_snapshot(queries: dict, oracles: dict[str, str]) -> list[str]:
             and row.get("hash_match")
             and not row.get("err")
         ):
-            # new rows record under the v2 (deep-closure) scheme; v1
-            # entries migrate one green row at a time
-            snap[name] = "2:" + query_fingerprint(
-                queries[name], oracles.get(name), version=2
-            )
+            snap[name] = "2:" + query_fingerprint(queries[name], oracles.get(name))
             updated.append(name)
-    # migration soundness: every entry still awaiting its v2 green row
-    # gets a TRANSITIONAL deep-closure baseline stamped now, while the
-    # checkout equals the one the local oracle hash-check just verified;
-    # must_front() fronts the query if the deep closure drifts from it.
-    for name, entry in list(snap.items()):
-        if name not in queries:
-            continue
-        ver, stored, _ = _snap_version(entry)
-        if ver < 2:
-            fp2 = query_fingerprint(queries[name], oracles.get(name), version=2)
-            snap[name] = f"{stored};2t:{fp2}"
     with open(SNAPSHOT_PATH, "w") as f:
         json.dump(dict(sorted(snap.items())), f, indent=1)
         f.write("\n")

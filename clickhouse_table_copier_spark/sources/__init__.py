@@ -1,8 +1,1 @@
 """Table sources: path-backed tables with catalog-style introspection."""
-
-from clickhouse_table_copier_spark.sources.table import TableRef, load_table  # noqa: F401
-from clickhouse_table_copier_spark.sources.catalog import (  # noqa: F401
-    describe_table,
-    table_exists,
-    row_count,
-)

@@ -205,6 +205,28 @@ def write_table(df: DataFrame, ref: TableRef, mode: str = "append") -> None:
     raise ValueError(f"unsupported table format: {ref.fmt!r}")
 
 
+def jdbc_execute(spark: SparkSession, ref: TableRef, sql: str) -> None:
+    """Driver-side statement on the table's server (the reference's
+    control-plane connection; data never flows through it)."""
+    jvm = spark._jvm
+    driver = ref.options.get("driver")
+    if driver:
+        jvm.java.lang.Class.forName(driver)
+    props = jvm.java.util.Properties()
+    for k in ("user", "password"):
+        if k in ref.options:
+            props.setProperty(k, str(ref.options[k]))
+    conn = jvm.java.sql.DriverManager.getConnection(ref.location, props)
+    try:
+        st = conn.createStatement()
+        # execute(), not executeUpdate(): the exists-probe is a SELECT and
+        # JDBC drivers reject executeUpdate for result-returning statements
+        st.execute(sql)
+        st.close()
+    finally:
+        conn.close()
+
+
 def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one of the fixture tables from a scale-factor directory."""
     return spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")

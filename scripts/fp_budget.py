@@ -2,7 +2,7 @@
 """Fingerprint-budget watchdog for optimization rounds.
 
 Usage:
-    python scripts/fp_budget.py save      # snapshot current v2 fingerprints
+    python scripts/fp_budget.py save      # snapshot current fingerprints
     python scripts/fp_budget.py diff      # list queries whose fingerprint
                                           # drifted from the saved snapshot
 
@@ -31,10 +31,7 @@ def _current() -> dict[str, str]:
     from clickhouse_table_copier_spark import registry_evidence as ev
 
     qs, oracles = entry.queries(), entry.oracle_sql()
-    return {
-        n: ev.query_fingerprint(fn, oracles.get(n), version=2)
-        for n, fn in qs.items()
-    }
+    return {n: ev.query_fingerprint(fn, oracles.get(n)) for n, fn in qs.items()}
 
 
 def main() -> int:

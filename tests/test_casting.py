@@ -10,7 +10,6 @@ from pyspark.sql import types as T
 
 from clickhouse_table_copier_spark.plans.casting import (
     align,
-    cast_plan,
     clickhouse_type_to_spark,
     common_columns,
 )
@@ -86,6 +85,17 @@ def test_align_invalid_semantic_values(spark):
     assert row["ip"] is None
 
 
+def test_align_matches_names_case_insensitively(spark):
+    """Upper-cased destination columns (Derby/Oracle) match the source's,
+    which keep their spelling and order; the keys lead uncast."""
+    src = spark.createDataFrame([(1, "a", 2, "x")], "k INT, Name STRING, qty INT, junk STRING")
+    dest = spark.createDataFrame([], "QTY BIGINT, NAME STRING, K BIGINT")
+    out = align(src, dest, keys=["k"])
+    assert out.dtypes == [("k", "int"), ("Name", "string"), ("qty", "bigint")]
+    with pytest.raises(ValueError, match="lacks partition columns"):
+        align(src, dest, keys=["junk"])
+
+
 def test_predicate_any_arity(spark):
     """The reference breaks AND-joining at arity > 2
     (sidefunctions.go:231); the engine must not, at any arity."""
@@ -117,11 +127,10 @@ def test_predicate_any_arity(spark):
     check()
 
 
-def test_cast_plan_passthrough_identity(spark):
+def test_align_passthrough_identity(spark):
     src = spark.createDataFrame([(1, "x")], "k INT, s STRING")
     dest = spark.createDataFrame([], "k INT, s STRING")
-    exprs = cast_plan(src, dest)
-    out = src.select(*exprs)
+    out = align(src, dest)
     assert out.schema == src.schema
     assert out.collect() == src.collect()
 

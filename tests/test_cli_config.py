@@ -8,11 +8,7 @@ from pathlib import Path
 
 import pytest
 
-from clickhouse_table_copier_spark.config import (
-    ConfigError,
-    parse_job_spec,
-    to_partition_spec,
-)
+from clickhouse_table_copier_spark.config import ConfigError, parse_job_spec
 from tests.conftest import SF_SMOKE
 
 # Driver-gate lane split (r17): this suite is in the SLOW lane so the
@@ -34,9 +30,8 @@ def _spec_dict(dest: str) -> dict:
 
 def test_parse_ok(tmp_path):
     job = parse_job_spec(_spec_dict(str(tmp_path / "d")))
-    assert job.check_hashes is True
-    spec = to_partition_spec(job)
-    assert spec.names == ["ship_month"]
+    assert job.options.check_hashes is True
+    assert job.spec.names == ["ship_month"]
 
 
 def test_missing_required_keys():
@@ -60,7 +55,7 @@ def test_non_boolean_flag_rejected():
 def test_bare_string_partition_key():
     d = _spec_dict("x")
     d["partition_by"] = ["l_returnflag"]
-    spec = to_partition_spec(parse_job_spec(d))
+    spec = parse_job_spec(d).spec
     assert spec.fields[0].expr == "l_returnflag"
 
 
@@ -193,20 +188,15 @@ def test_example_configs_run_under_cli_info(name, tmp_path):
 def test_example_jdbc_config_parses_to_reader_contract():
     """The remote-server example (no ClickHouse in this container) must
     parse end-to-end into the exact spark.read option set + C9 knobs."""
-    from clickhouse_table_copier_spark.config import read_config, to_partition_spec
+    from clickhouse_table_copier_spark.config import read_config
     from clickhouse_table_copier_spark.sources.table import (
-        TableRef,
         jdbc_reader_options,
         jdbc_retry_policy,
     )
 
     job = read_config("examples/job_jdbc_source.yaml")
-    spec = to_partition_spec(job)
-    assert [f.name for f in spec.fields] == ["event_date"]
-    ref = TableRef(
-        location=job.source.location, fmt=job.source.format,
-        table=job.source.table, options=job.source.options,
-    )
+    assert [f.name for f in job.spec.fields] == ["event_date"]
+    ref = job.source
     opts = jdbc_reader_options(ref)
     assert opts["url"].startswith("jdbc:clickhouse://")
     assert opts["dbtable"] == "events"

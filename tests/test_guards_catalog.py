@@ -34,3 +34,17 @@ def test_describe_table(spark):
 def test_table_exists(spark):
     assert table_exists(spark, TableRef(f"{SF_SMOKE}/region.parquet"))
     assert not table_exists(spark, TableRef(f"{SF_SMOKE}/nope.parquet"))
+
+
+def test_table_exists_unreachable_jdbc_raises(spark, tmp_path):
+    """A server that cannot be reached is not evidence that the table is
+    absent: the probe raises once its retries are spent, so sync never
+    takes the dest-absent branch and writes the table a second time."""
+    ref = TableRef(
+        location=f"jdbc:derby:{tmp_path / 'no_such_db'}",  # no ;create=true
+        fmt="jdbc",
+        table="items",
+        options={"driver": "org.apache.derby.jdbc.EmbeddedDriver", "connect_retries": "0"},
+    )
+    with pytest.raises(Exception, match="not found"):
+        table_exists(spark, ref)

@@ -242,14 +242,8 @@ def test_config_surfaces_retry_options():
             "partition_by": ["event_type"],
         }
     )
-    ref = TableRef(
-        location=job.source.location,
-        fmt=job.source.format,
-        table=job.source.table,
-        options=job.source.options,
-    )
     # -1 = the reference's infinite-reconnect parity mode
-    assert jdbc_retry_policy(ref) == (-1, 5.0)
+    assert jdbc_retry_policy(job.source) == (-1, 5.0)
 
 
 def test_jdbc_write_roundtrip(spark, derby_table, tmp_path):
@@ -328,13 +322,13 @@ def test_sync_to_jdbc_full_cycle(spark):
     assert {r["verdict"] for r in res2.report.collect()} == {"identical"}
 
     # 3. corrupt one partition + delete another on the dest, then repair
-    from clickhouse_table_copier_spark.operators.sync_jdbc import _jdbc_execute
+    from clickhouse_table_copier_spark.sources.table import jdbc_execute
 
-    _jdbc_execute(
+    jdbc_execute(
         spark, _jdbc_ref("li_sync"),
         'UPDATE li_sync SET "l_quantity" = "l_quantity" + 1 WHERE "ship_month" = 4',
     )
-    _jdbc_execute(
+    jdbc_execute(
         spark, _jdbc_ref("li_sync"), 'DELETE FROM li_sync WHERE "ship_month" = 7'
     )
     res3 = sync(spark, li, _jdbc_ref("li_sync"), spec)
@@ -366,7 +360,7 @@ def test_sync_to_jdbc_tuple_key_delete(spark):
     WHERE must remove exactly the doomed (type, band) partitions — the
     arity case the reference's GenerateWhere breaks at (tmp=+1 bug)."""
     from clickhouse_table_copier_spark.operators.sync import sync
-    from clickhouse_table_copier_spark.operators.sync_jdbc import _jdbc_execute
+    from clickhouse_table_copier_spark.sources.table import jdbc_execute
     from clickhouse_table_copier_spark.plans.partition_spec import (
         PartitionField,
         PartitionSpec,
@@ -395,7 +389,7 @@ def test_sync_to_jdbc_tuple_key_delete(spark):
     assert n_parts >= 6  # several types × bands
 
     # corrupt TWO tuple partitions
-    _jdbc_execute(
+    jdbc_execute(
         spark, ref,
         "UPDATE ev_sync SET \"value\" = \"value\" + 0.5"
         " WHERE (\"event_type\" = 'click' AND \"vband\" = 0)"
@@ -467,22 +461,22 @@ def test_write_table_tolerates_read_sharding_options(spark, tmp_path):
 # dest-absent branch (whose overwrite would DROP a healthy remote table).
 # ---------------------------------------------------------------------------
 def test_exists_probe_missing_table_is_false(spark, derby_table):
-    from clickhouse_table_copier_spark.operators.sync_jdbc import _jdbc_table_exists
+    from clickhouse_table_copier_spark.sources.catalog import table_exists
 
     ref = TableRef(
         location=DERBY_URL, fmt="jdbc", table="definitely_not_a_table",
         options={"driver": DERBY_DRIVER, "connect_retries": "0"},
     )
-    assert _jdbc_table_exists(spark, ref) is False  # Derby SQLState 42X05
+    assert table_exists(spark, ref) is False  # Derby SQLState 42X05
     present = TableRef(
         location=DERBY_URL, fmt="jdbc", table="items",
         options={"driver": DERBY_DRIVER, "connect_retries": "0"},
     )
-    assert _jdbc_table_exists(spark, present) is True
+    assert table_exists(spark, present) is True
 
 
 def test_exists_probe_connection_failure_raises(spark):
-    from clickhouse_table_copier_spark.operators.sync_jdbc import _jdbc_table_exists
+    from clickhouse_table_copier_spark.sources.catalog import table_exists
 
     # a Derby memory db that was never created (no ;create=true) fails at
     # CONNECT time (SQLState XJ004), not with a table-missing state
@@ -493,7 +487,7 @@ def test_exists_probe_connection_failure_raises(spark):
                  "retry_delay_s": "0"},
     )
     with pytest.raises(Exception):
-        _jdbc_table_exists(spark, ref)
+        table_exists(spark, ref)
 
 
 def test_sql_equality_where_backslash_dialects():

@@ -41,15 +41,11 @@ def test_fingerprint_invariant_under_cache_mutation():
     the oracle suite had run the ranks queries."""
     qs, oracles = entry.queries(), entry.oracle_sql()
     name = "rfm_segments"
-    before = registry_evidence.query_fingerprint(
-        qs[name], oracles.get(name), version=2
-    )
+    before = registry_evidence.query_fingerprint(qs[name], oracles.get(name))
     sentinel = object()
     ranks._LIVE_CACHES.append(sentinel)
     try:
-        after = registry_evidence.query_fingerprint(
-            qs[name], oracles.get(name), version=2
-        )
+        after = registry_evidence.query_fingerprint(qs[name], oracles.get(name))
     finally:
         ranks._LIVE_CACHES.remove(sentinel)
     assert before == after

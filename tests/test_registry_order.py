@@ -171,70 +171,40 @@ def test_snapshot_entries_match_registry():
 
 
 def test_deep_fingerprint_reaches_second_level_helpers():
-    """The v2 (round-7) closure must include helpers-of-helpers: the
-    observed v1 hole was queries_pipeline._cache_get — reached only via
-    _shared_jaccard_pairs — whose edit changed executed physical
+    """The fingerprint closure must include helpers-of-helpers: the
+    observed one-level hole was queries_pipeline._cache_get — reached
+    only via _shared_jaccard_pairs — whose edit changed executed physical
     behavior without flagging any consumer stale."""
-    qs, oracles = entry.queries(), entry.oracle_sql()
-    fn = qs["similarity_triangle_count"]
-    deep = registry_evidence._helper_sources_v2(fn)
-    shallow = registry_evidence._helper_sources_v1(fn)
+    qs = entry.queries()
+    deep = registry_evidence._helper_sources_v2(qs["similarity_triangle_count"])
     assert "_cache_get" in deep
-    assert "_cache_get" not in shallow  # the documented v1 limitation
-    # and the two schemes therefore fingerprint differently
-    o = oracles["similarity_triangle_count"]
-    assert registry_evidence.query_fingerprint(
-        fn, o, version=2
-    ) != registry_evidence.query_fingerprint(fn, o, version=1)
 
 
 def test_snapshot_version_parsing():
-    assert registry_evidence._snap_version("abc123") == (1, "abc123", None)
-    assert registry_evidence._snap_version("2:def456") == (2, "def456", None)
-    # round-8 migration-soundness form: v1 verified + transitional v2
-    assert registry_evidence._snap_version("abc123;2t:fed987") == (
-        1,
-        "abc123",
-        "fed987",
-    )
+    assert registry_evidence._snap_hex("2:def456") == "def456"
+    # any other form records no verified fingerprint
+    assert registry_evidence._snap_hex("abc123") is None
+    assert registry_evidence._snap_hex("abc123;2t:fed987") is None
+    assert registry_evidence._snap_hex("") is None
 
 
-def test_transitional_baseline_catches_deep_helper_drift(monkeypatch):
-    """Round-8 migration soundness: a v1 snapshot entry whose
-    TRANSITIONAL deep-closure baseline no longer matches current source
-    must front, even though its shallow v1 fingerprint is unchanged —
-    the exact hole the r7 judge flagged (deep-helper edits invisible to
-    v1 entries until migration). Simulated by stamping a v1 entry whose
-    v1 hash matches current source but whose `;2t:` hash does not."""
+def test_unprefixed_snapshot_entry_fronts(monkeypatch):
+    """An entry recorded without the `2:` prefix counts as unverified,
+    even when its hex equals the current fingerprint."""
     qs, oracles = entry.queries(), entry.oracle_sql()
-    # pick a query that is NOT already fronting (a never-green or
-    # changed query fronts for its own reason, masking the one under test)
     already = registry_evidence.must_front(qs, oracles)
     name = next(n for n in qs if n not in already)
-    v1 = registry_evidence.query_fingerprint(qs[name], oracles.get(name), version=1)
     snap = dict(registry_evidence.load_snapshot())
-    snap[name] = f"{v1};2t:{'0' * 64}"
+    snap[name] = registry_evidence.query_fingerprint(qs[name], oracles.get(name))
     monkeypatch.setattr(registry_evidence, "load_snapshot", lambda: snap)
-    need = registry_evidence.must_front(qs, oracles)
-    assert name in need and "deep-helper closure" in need[name]
-    # and with the CORRECT transitional hash it does not front
-    v2 = registry_evidence.query_fingerprint(qs[name], oracles.get(name), version=2)
-    snap[name] = f"{v1};2t:{v2}"
-    assert name not in registry_evidence.must_front(qs, oracles)
+    assert registry_evidence.must_front(qs, oracles)[name] == "no verified fingerprint on record"
 
 
-def test_all_v1_snapshot_entries_carry_transitional_baselines():
-    """No bare-v1 entries may remain after a round-start --update: every
-    entry is either v2-verified or v1+transitional, so the deep-closure
-    gate covers the whole registry with no migration window."""
+def test_all_snapshot_entries_are_v2():
+    """Every committed snapshot entry records a `2:` fingerprint."""
     snap = registry_evidence.load_snapshot()
-    bare = [
-        n
-        for n, e in snap.items()
-        if registry_evidence._snap_version(e)[0] < 2
-        and registry_evidence._snap_version(e)[2] is None
-    ]
-    assert bare == [], f"v1 entries without a transitional baseline: {bare}"
+    bare = [n for n, e in snap.items() if registry_evidence._snap_hex(e) is None]
+    assert bare == [], f"entries without a `2:` fingerprint: {bare}"
 
 
 def test_oracles_follow_the_same_order():

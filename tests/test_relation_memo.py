@@ -46,3 +46,21 @@ def test_events_c_and_corpus_c_memoize_and_match(spark):
     assert co is _corpus_c(spark, SF_TINY)
     assert co.count() == _corpus(spark, SF_TINY).count()
     assert co.storageLevel.useMemory is False
+
+
+def test_memos_key_on_the_session(spark):
+    """A ``newSession()`` shares the application but not its confs: each
+    memo hands it a frame of its own, bound to that session."""
+    from clickhouse_table_copier_spark.queries import _events_c, _tc
+    from clickhouse_table_copier_spark.queries_pipeline import _corpus_c
+
+    other = spark.newSession()
+    for load in (
+        lambda s: _tc(s, SF_TINY, "lineitem"),
+        lambda s: _events_c(s, SF_TINY),
+        lambda s: _corpus_c(s, SF_TINY),
+    ):
+        mine, theirs = load(spark), load(other)
+        assert theirs is not mine
+        assert theirs.sparkSession is other and mine.sparkSession is spark
+        assert load(other) is theirs

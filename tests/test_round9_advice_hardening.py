@@ -45,6 +45,32 @@ def test_weighted_quantiles_rejects_null_and_nonpositive(spark):
         ranks.weighted_quantiles(df_zero, "g", "v", "w", parts=4)
 
 
+def test_weighted_quantiles_rejects_quoted_label(spark):
+    df = spark.createDataFrame([("a", 1.0, 2)], "g string, v double, w int")
+    with pytest.raises(ValueError, match="must not contain"):
+        ranks.weighted_quantiles(df, "g", "v", "w", quantiles=[("p'50", 1, 2)], parts=4)
+
+
+def test_weighted_quantiles_rejects_decimal_overflow(spark):
+    """den · W must stay below 10^38 (decimal(38,0)); the default
+    quartiles have den 4."""
+    from decimal import Decimal
+
+    e37 = Decimal(10**37)
+    schema = "g string, v double, w decimal(38,0)"
+    ok = spark.createDataFrame([("a", 1.0, e37), ("a", 2.0, e37)], schema)
+    got = ranks.weighted_quantiles(ok, "g", "v", "w", parts=4).collect()[0]
+    assert (got["p25"], got["p50"], got["p75"]) == (1.0, 1.0, 2.0)
+    big = spark.createDataFrame([("a", 1.0, e37), ("b", 2.0, 2 * e37)], schema)
+    with pytest.raises(ValueError, match="10\\^38"):
+        ranks.weighted_quantiles(big, "g", "v", "w", parts=4)
+    # a total beyond decimal(38,0) itself
+    huge = spark.createDataFrame([("a", 1.0, 6 * e37), ("a", 2.0, 6 * e37)], schema)
+    with pytest.raises(ValueError, match="10\\^38"):
+        ranks.weighted_quantiles(huge, "g", "v", "w", parts=4)
+    ranks.release_caches()
+
+
 def test_release_caches_unpersists_tracked_frames(spark):
     df = spark.createDataFrame(
         [(float(i), i) for i in range(20)], "v double, tie int"

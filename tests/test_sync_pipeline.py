@@ -6,7 +6,9 @@ one extra partition, the delete-only path and a dry run. The partition
 keys include NULL; on parquet also a value Spark escapes in directory
 names (``a/b``). After each step the destination's partition fingerprints
 must equal the source's, and the report must say what changed on disk or
-in the table.
+in the table. A run that fails at a phase boundary (report collected,
+JDBC rows deleted, parquet directories about to be removed) is repaired
+by the next run to the state an uninterrupted run reaches.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from __future__ import annotations
 import datetime
 import os
 import uuid
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,11 +30,10 @@ DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 SPEC = PartitionSpec.bare("k")
 
 
-@pytest.fixture(params=["parquet", "jdbc"])
-def dest(request, tmp_path):
+def _dest(kind: str, tmp_path):
     """(destination, its three source keys and one destination-only key,
     the key column's type)."""
-    if request.param == "parquet":
+    if kind == "parquet":
         return TableRef(location=str(tmp_path / "dest")), (None, "a/b", "x", "zz"), "string"
     # Spark writes a NULL string to Derby as a CLOB, which no comparable
     # column type accepts, so the Derby table is keyed by integers
@@ -42,6 +44,11 @@ def dest(request, tmp_path):
         options={"driver": DERBY_DRIVER},
     )
     return ref, (None, 1, 2, 9), "bigint"
+
+
+@pytest.fixture(params=["parquet", "jdbc"])
+def dest(request, tmp_path):
+    return _dest(request.param, tmp_path)
 
 
 def _fingerprints(df, key: str = "k", key_type: str = "string") -> dict:
@@ -128,6 +135,72 @@ def test_pipeline_steps(spark, dest):
     res = sync(spark, src, dest, SPEC)
     assert res.copied_partitions == 3
     assert fp(load_table(spark, dest)) == {**src_fp, **extra_fp}
+
+
+def _crash(*args, **kwargs):
+    raise RuntimeError("injected")
+
+
+# (destination kind, boundary): where the failure is injected, and what a
+# crashed run leaves behind
+CRASHES = [
+    ("parquet", "after_report"),  # report collected, nothing written yet
+    ("jdbc", "after_report"),
+    ("jdbc", "after_delete"),  # the DELETE ran, the append did not
+    ("parquet", "before_dir_delete"),  # skip_reimport, no directory removed
+]
+
+
+@pytest.mark.parametrize("kind,boundary", CRASHES)
+def test_crash_at_phase_boundary_converges(spark, tmp_path, monkeypatch, kind, boundary):
+    """A sync that fails at a phase boundary leaves a destination the next
+    run brings to the same partition fingerprints as a run that never
+    failed."""
+    from clickhouse_table_copier_spark.operators import sync as sync_mod
+    from clickhouse_table_copier_spark.operators import sync_jdbc
+
+    dest, (null, a, b, extra), key_type = _dest(kind, tmp_path)
+    schema = f"id BIGINT, k {key_type}, v BIGINT"
+    src = spark.createDataFrame([(1, null, 10), (2, null, 20), (3, a, 30), (4, b, 40)], schema)
+    extra_row = spark.createDataFrame([(6, extra, 60)], schema)
+    fp = lambda df: _fingerprints(df, "k", key_type)  # noqa: E731
+    if boundary == "before_dir_delete":
+        options = SyncOptions(skip_reimport=True)
+        start = src.withColumn("v", F.col("v") + 1).unionByName(extra_row)
+    else:  # NULL partition mutated, `a` missing, `b` identical, `extra` only in dest
+        options = SyncOptions()
+        start = src.where(F.col("id") != 3).withColumn(
+            "v", F.col("v") + F.col("k").isNull().cast("bigint")
+        ).unionByName(extra_row)
+
+    uninterrupted = replace(dest, table="t_ref") if kind == "jdbc" else replace(
+        dest, location=dest.location + "_ref"
+    )
+    for d in (dest, uninterrupted):
+        _replace(spark, d, start)
+    sync(spark, src, uninterrupted, SPEC, options)
+    expected = fp(load_table(spark, uninterrupted))
+
+    with monkeypatch.context() as m:
+        if boundary == "after_report":
+            m.setattr(sync_jdbc, "apply", _crash)
+            m.setattr(sync_mod, "_apply_parquet", _crash)
+        elif boundary == "after_delete":
+            m.setattr(sync_jdbc, "write_table", _crash)
+        else:
+            m.setattr(sync_mod, "_delete_partition_dirs", _crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            sync(spark, src, dest, SPEC, options)
+    crashed = fp(load_table(spark, dest))
+    started = fp(start)
+    if boundary == "after_delete":
+        del started[null]  # the mutated partition was deleted, not rewritten
+    assert crashed == started
+
+    sync(spark, src, dest, SPEC, options)
+    assert fp(load_table(spark, dest)) == expected
+    assert expected == ({extra: fp(extra_row)[extra]} if options.skip_reimport
+                        else {**fp(src), **fp(extra_row)})
 
 
 def test_timestamp_ntz_key_resyncs(spark, tmp_path):
