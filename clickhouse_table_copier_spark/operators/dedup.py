@@ -765,28 +765,6 @@ def drop_duplicate_paragraphs(
     )
 
 
-def normalized_text_multilingual(text: Column | str) -> Column:
-    """Unicode-aware twin of :func:`normalized_text` for MULTILINGUAL
-    corpora: lowercase, strip everything that is not a letter/digit in
-    ANY script (Java regex ``\\p{L}\\p{N}`` — JVM-side, codegen), and
-    collapse whitespace.  The ASCII ``normalized_text`` is pinned by
-    the registered queries' oracles and is correct for the Latin
-    fixture — but on a real crawl it strips EVERY non-Latin codepoint,
-    so all Chinese (or Arabic, or Russian …) documents would normalize
-    to the empty string and mass-collide into ONE exact-dedup group.
-    Use this one (plus :func:`unicode_normalized` for NFC/NFD folding)
-    ahead of ``exact_dedup(..., normalize=False)`` on multilingual
-    data; SCALE.md carries the hazard note."""
-    t = F.col(text) if isinstance(text, str) else text
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(t), r"[^\p{L}\p{N} ]", ""),
-            r"\s+",
-            " ",
-        )
-    )
-
-
 def unicode_normalized(df: DataFrame, text_col: str, out_col: str,
                        form: str = "NFKC") -> DataFrame:
     """Append ``out_col`` = unicodedata-normalized ``text_col`` (NFKC

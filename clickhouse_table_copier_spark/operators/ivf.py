@@ -230,39 +230,3 @@ def ivf_topk(
     return _score_topk(
         cells.where(F.col("cell").isin(probe)), query_vec, k, id_col, vec_col
     )
-
-
-def write_ivf_layout(
-    df: DataFrame,
-    centroids: list[list[float]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the IVF-Flat STORED layout: vectors written partitioned by
-    cell, so probing becomes Spark partition pruning (directory-level
-    skip) rather than a filter over a full scan — the 100 TB shape where
-    each query touches ~n_probe/k of the table's files."""
-    assign_cells(df, centroids, id_col, vec_col).write.partitionBy(
-        "cell"
-    ).parquet(path)
-
-
-def ivf_topk_stored(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k over a :func:`write_ivf_layout` store. The ``cell IN (probes)``
-    predicate is a partition filter — the scan lists only the probed cell
-    directories (asserted by test, not assumed)."""
-    probe = probe_cells(centroids, query_vec, n_probe)
-    store = spark.read.parquet(path)
-    return _score_topk(
-        store.where(F.col("cell").isin(probe)), query_vec, k, id_col, vec_col
-    )

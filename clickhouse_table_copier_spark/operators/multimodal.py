@@ -2065,82 +2065,6 @@ def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
     return df.select("media_id", "content").mapInPandas(fn, FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("target_w", T.IntegerType()),
-        T.StructField("target_h", T.IntegerType()),
-    ]
-)
-
-
-def resize_images(df: DataFrame, target_w: int = 224, target_h: int = 224) -> DataFrame:
-    """Resize stage: REAL nearest-neighbor resample for the formats the
-    pure-Python decoders cover — PNG, JPEG, GIF, and BMP: decode
-    raster → numpy index-sample → re-encode PNG at the target size
-    (JPEG/GIF/BMP input transcodes to PNG — lossless on the sampled pixels,
-    and every downstream stage here reads PNG; palette/interlaced/16-bit
-    PNG input transcodes to the plain 8-bit form the decoder
-    normalizes to). Undecodable containers (arithmetic / 12-bit JPEG)
-    keep the documented stub: the PNG header is re-written with the
-    target dims and a real deployment swaps in PIL/libvips — the Spark
-    plumbing (Arrow-batched mapInPandas, binary in/binary out,
-    partition-preserving) is identical either way.
-    """
-
-    def make_fn(tw: int, th: int):
-        import struct as _struct
-
-        import numpy as _np
-
-        decode_raster = _make_png_raster_decoder()
-        decode_jpg = _make_jpeg_raster_decoder()
-        decode_gif = _make_gif_raster_decoder()
-        decode_bmp = _make_bmp_raster_decoder()
-
-        def fn(batches):
-            for pdf in batches:
-                ids, outs = [], []
-                for mid, content in zip(pdf["media_id"], pdf["content"]):
-                    b = bytes(content)
-                    got = (
-                        decode_raster(b)
-                        or decode_jpg(b)
-                        or decode_gif(b)
-                        or decode_bmp(b)
-                    )
-                    if got is not None:
-                        w, h, nch, arr = got
-                        xs = (_np.arange(tw) * w) // tw
-                        ys = (_np.arange(th) * h) // th
-                        resized = arr[ys][:, xs]  # (th, tw, nch) uint8
-                        out = encode_png(
-                            resized.tobytes(), tw, th, channels=nch
-                        )
-                    elif b[:8] == b"\x89PNG\r\n\x1a\n":
-                        # covered-format seam: re-header only
-                        out = b[:16] + _struct.pack(">II", tw, th) + b[24:]
-                    else:
-                        out = b  # unknown container: pass through unchanged
-                    ids.append(mid)
-                    outs.append(bytearray(out))
-                yield pd.DataFrame(
-                    {
-                        "media_id": ids,
-                        "content": outs,
-                        "target_w": [tw] * len(ids),
-                        "target_h": [th] * len(ids),
-                    }
-                )
-
-        return fn
-
-    return df.select("media_id", "content").mapInPandas(
-        make_fn(target_w, target_h), RESIZED_SCHEMA
-    )
-
-
 def _make_bmp_raster_decoder():
     """BMP raster decode (closure): uncompressed BI_RGB at 24/32 bits,
     the 1/4/8-bit paletted forms (BGRA-quad color table after the info
@@ -2994,151 +2918,9 @@ def near_duplicate_images(
 
 
 # ---------------------------------------------------------------------------
-# Video: REAL ISO-BMFF (MP4) box-structure parsing — the container walk
-# needs no codec libraries, only struct. Synthesis writes genuine
-# ftyp/moov/mvhd/trak/tkhd box trees (sizes, versions, 16.16 fixed-point
-# dims all real); decode walks the box hierarchy like any demuxer's
-# probe step. Frame DECODE stays behind the documented seam (a codec is
-# out of scope in this container) — but duration/track/dimension
-# metadata, and the frame-sampling plan derived from real duration×fps,
-# are genuine.
+# Video: REAL RIFF/AVI container walk — needs no codec libraries, only
+# struct; MJPEG frames then decode through the pure-Python JPEG decoder.
 # ---------------------------------------------------------------------------
-VIDEO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("brand", T.StringType()),
-        T.StructField("timescale", T.LongType()),
-        T.StructField("duration_units", T.LongType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("n_tracks", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def _mp4_box(btype: bytes, payload: bytes) -> bytes:
-    return struct.pack(">I", 8 + len(payload)) + btype + payload
-
-
-def synthesize_video_table(spark, n: int = 16) -> DataFrame:
-    """Deterministic fixture of REAL minimal MP4 box trees: ftyp +
-    moov(mvhd + one trak(tkhd)) with per-id timescale/duration/dims, so
-    the parser exercises genuine nested box structure."""
-    rows = []
-    for i in range(n):
-        timescale = 600 + 100 * (i % 4)
-        duration = timescale * (2 + i % 7)  # whole seconds
-        w, h = 320 + 16 * (i % 5), 240 + 16 * (i % 3)
-        ftyp = _mp4_box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomavc1")
-        mvhd = _mp4_box(
-            b"mvhd",
-            b"\x00\x00\x00\x00"  # version 0 + flags
-            + struct.pack(">II", 0, 0)  # ctime, mtime
-            + struct.pack(">II", timescale, duration)
-            + struct.pack(">I", 0x00010000)  # rate 1.0
-            + struct.pack(">H", 0x0100)  # volume
-            + b"\x00" * 10
-            + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-            + b"\x00" * 24
-            + struct.pack(">I", 2),  # next track id
-        )
-        tkhd = _mp4_box(
-            b"tkhd",
-            b"\x00\x00\x00\x07"  # version 0 + enabled flags
-            + struct.pack(">II", 0, 0)
-            + struct.pack(">I", 1)  # track id
-            + b"\x00" * 4
-            + struct.pack(">I", duration)
-            + b"\x00" * 8
-            + struct.pack(">hhh", 0, 0, 0)
-            + b"\x00" * 2
-            + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-            + struct.pack(">II", w << 16, h << 16),  # 16.16 fixed point
-        )
-        trak = _mp4_box(b"trak", tkhd)
-        moov = _mp4_box(b"moov", mvhd + trak)
-        rows.append(
-            (i, "video", bytearray(ftyp + moov), '{"fmt":"mp4"}')
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def _make_mp4_parser():
-    """ISO-BMFF box walk as a closure (pickling rule, see
-    _make_update_user_stats). Handles 64-bit largesize boxes and mvhd
-    version 1; returns None for anything that isn't a well-formed MP4."""
-    import struct as _struct
-
-    def boxes(b: bytes, start: int, end: int):
-        pos = start
-        while pos + 8 <= end:
-            size, btype = _struct.unpack(">I4s", b[pos : pos + 8])
-            body_off = pos + 8
-            if size == 1:  # 64-bit largesize
-                if pos + 16 > end:
-                    return
-                (size,) = _struct.unpack(">Q", b[pos + 8 : pos + 16])
-                body_off = pos + 16
-            elif size == 0:  # box extends to end
-                size = end - pos
-            if size < 8 or pos + size > end:
-                return
-            yield btype, body_off, pos + size
-            pos += size
-
-    def parse(b: bytes):
-        try:
-            top = {t: (s, e) for t, s, e in boxes(b, 0, len(b))}
-            if b"ftyp" not in top or b"moov" not in top:
-                return None
-            fs, _fe = top[b"ftyp"]
-            brand = b[fs : fs + 4].decode("ascii", "replace")
-            ms, me = top[b"moov"]
-            timescale = duration = None
-            n_tracks, width, height = 0, None, None
-            for t, s, e in boxes(b, ms, me):
-                if t == b"mvhd":
-                    ver = b[s]
-                    if ver == 1:
-                        timescale, duration = _struct.unpack(
-                            ">IQ", b[s + 20 : s + 32]
-                        )
-                    else:
-                        timescale, duration = _struct.unpack(
-                            ">II", b[s + 12 : s + 20]
-                        )
-                elif t == b"trak":
-                    n_tracks += 1
-                    for tt, ts_, te in boxes(b, s, e):
-                        if tt == b"tkhd" and width is None:
-                            ver = b[ts_]
-                            # end of duration+trailing-reserved: v0
-                            # payload 32, v1 payload 44; then layer/
-                            # group/volume/reserved (8) + matrix (36)
-                            off = ts_ + (32 if ver == 0 else 44)
-                            woff = off + 8 + 36
-                            w_fp, h_fp = _struct.unpack(
-                                ">II", b[woff : woff + 8]
-                            )
-                            width, height = w_fp >> 16, h_fp >> 16
-            if timescale is None or not timescale:
-                return None
-            return (
-                brand,
-                int(timescale),
-                int(duration),
-                duration / timescale,
-                n_tracks,
-                width,
-                height,
-            )
-        except Exception:
-            return None
-
-    return parse
-
-
 def _make_avi_parser():
     """RIFF/AVI walk as a closure: ``avih`` header (frame period,
     counts, dims) + the ``movi`` list's stream-0 frame chunks
@@ -3159,10 +2941,7 @@ def _make_avi_parser():
             yield cid, pos + 8, pos + 8 + size
             pos += 8 + size + (size & 1)  # chunks are word-aligned
 
-    def parse(b: bytes, with_frames: bool = True):
-        """``with_frames=False`` walks headers only — metadata scans
-        skip slicing every frame's bytes (memory = the header, not
-        ~2× the blob)."""
+    def parse(b: bytes):
         try:
             if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
                 return None
@@ -3174,8 +2953,7 @@ def _make_avi_parser():
                 # 'rec ' sub-lists interleaved AVIs use
                 for cid2, s2, e2 in _chunks(b, start, end):
                     if cid2 in (b"00dc", b"00db"):
-                        if with_frames:
-                            frames.append(b[s2:e2])
+                        frames.append(b[s2:e2])
                     elif cid2 == b"LIST" and b[s2 : s2 + 4] == b"rec ":
                         grab(s2 + 4, e2)
 
@@ -3199,79 +2977,6 @@ def _make_avi_parser():
             return None
 
     return parse
-
-
-def decode_video_meta(df: DataFrame) -> DataFrame:
-    """Container-level video metadata via the real box/chunk walk (MP4
-    box tree or RIFF/AVI header); rows that don't parse yield NULL
-    metadata (the seam rule: never fabricate).  For AVI the timescale
-    is fixed at 1e6 (the header's frame period is in microseconds)."""
-
-    def make_fn():
-        parse = _make_mp4_parser()
-        parse_avi = _make_avi_parser()
-
-        def fn(batches):
-            for pdf in batches:
-                out = {k: [] for k in (
-                    "media_id", "brand", "timescale", "duration_units",
-                    "duration_s", "n_tracks", "width", "height",
-                )}
-                for mid, content in zip(pdf["media_id"], pdf["content"]):
-                    raw = bytes(content)
-                    got = parse(raw)
-                    if got is None:
-                        avi = parse_avi(raw, with_frames=False)
-                        if avi is not None:
-                            usec, total, streams, w, h, _frames = avi
-                            du = int(usec) * int(total)
-                            got = (
-                                "AVI ", 1_000_000, du, du / 1e6,
-                                int(streams), int(w), int(h),
-                            )
-                    out["media_id"].append(mid)
-                    if got is None:
-                        for k in ("brand", "timescale", "duration_units",
-                                  "duration_s", "n_tracks", "width", "height"):
-                            out[k].append(None)
-                    else:
-                        (brand, ts_, du, ds, nt, w, h) = got
-                        out["brand"].append(brand)
-                        out["timescale"].append(ts_)
-                        out["duration_units"].append(du)
-                        out["duration_s"].append(ds)
-                        out["n_tracks"].append(nt)
-                        out["width"].append(w)
-                        out["height"].append(h)
-                yield pd.DataFrame(out)
-
-        return fn
-
-    return df.select("media_id", "content").mapInPandas(
-        make_fn(), VIDEO_META_SCHEMA
-    )
-
-
-def video_frame_plan(
-    df: DataFrame, fps: int = 30, every_n: int = 30
-) -> DataFrame:
-    """Frame-sampling plan from REAL container duration (replaces the
-    byte-length heuristic of :func:`frame_sample_plan` for parseable
-    MP4s): one row per sampled frame index over duration_s × fps frames.
-    The decode of those frames is the documented codec seam; the PLAN —
-    schema, fan-out, partitioning — is what the pipeline schedules on."""
-    meta = decode_video_meta(df).where(F.col("duration_s").isNotNull())
-    n_frames = F.floor(F.col("duration_s") * fps).cast("long")
-    return meta.select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(n_frames - 1, F.lit(0)),
-                F.lit(every_n),
-            )
-        ).alias("frame_idx"),
-    )
 
 
 VIDEO_FRAME_SCHEMA = T.StructType(
@@ -3863,92 +3568,6 @@ def _fingerprint_frame(
     return df.select("media_id", "content").mapInPandas(
         make_fn(window, hop, bands), AUDIO_FPRINT_SCHEMA
     )
-
-
-def _make_avi_audio_parser():
-    """Audio-track extraction from RIFF/AVI as a closure: the ``strl``
-    headers in declaration order give each stream its index and type;
-    the first ``auds`` stream's ``strf`` is a WAVEFORMATEX (tag,
-    channels, rate, byterate, align, bits) and its movi chunks are
-    ``NNwb`` with NN = the stream index (also inside ``rec `` sub-
-    lists).  Returns ``(sr, ch, bits, tag, pcm)`` — parse_wav's tuple,
-    so the whole PCM pipeline (float conversion, DSP, fingerprint) is
-    shared — or None when there is no parseable PCM audio stream."""
-    import struct as _struct
-
-    def _chunks(b: bytes, start: int, end: int):
-        pos = start
-        while pos + 8 <= end:
-            cid = b[pos : pos + 4]
-            size = _struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-            if pos + 8 + size > end:
-                return
-            yield cid, pos + 8, pos + 8 + size
-            pos += 8 + size + (size & 1)
-
-    def parse(b: bytes):
-        try:
-            if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-                return None
-            aud_idx = None
-            fmt = None
-            stream_no = 0
-            pieces = []
-
-            def grab(start: int, end: int, want: bytes):
-                for cid2, s2, e2 in _chunks(b, start, end):
-                    if cid2 == want:
-                        pieces.append(b[s2:e2])
-                    elif cid2 == b"LIST" and b[s2 : s2 + 4] == b"rec ":
-                        grab(s2 + 4, e2, want)
-
-            for cid, s, e in _chunks(b, 12, len(b)):
-                if cid != b"LIST":
-                    continue
-                ltype = b[s : s + 4]
-                if ltype == b"hdrl":
-                    for cid2, s2, e2 in _chunks(b, s + 4, e):
-                        if not (
-                            cid2 == b"LIST" and b[s2 : s2 + 4] == b"strl"
-                        ):
-                            continue
-                        fcc = None
-                        strf = None
-                        for cid3, s3, e3 in _chunks(b, s2 + 4, e2):
-                            if cid3 == b"strh":
-                                fcc = b[s3 : s3 + 4]
-                            elif cid3 == b"strf":
-                                strf = b[s3:e3]
-                        if fcc == b"auds" and aud_idx is None and strf:
-                            aud_idx = stream_no
-                            fmt = _struct.unpack("<HHIIHH", strf[:16])
-                        stream_no += 1
-                elif ltype == b"movi" and aud_idx is not None:
-                    grab(s + 4, e, f"{aud_idx:02d}wb".encode())
-            if fmt is None or not pieces:
-                return None
-            tag, ch, sr, _br, _al, bits = fmt
-            if not sr or not ch or not bits or bits % 8:
-                return None
-            return sr, ch, bits, tag, b"".join(pieces)
-        except Exception:
-            return None
-
-    return parse
-
-
-def video_audio_fingerprint(
-    df: DataFrame, window: int = 1024, hop: int = 512, bands: int = 16
-) -> DataFrame:
-    """:func:`audio_fingerprint` over the AUDIO TRACK of video
-    containers (RIFF/AVI with a PCM ``auds`` stream): the extracted
-    track runs through the SAME float/downmix/core pipeline, so a
-    video and its soundtrack exported as WAV produce identical
-    ``fhash`` rows — soundtrack↔clip dedup across containers, exactly
-    as per-frame aHash gives video↔image dedup.  Containers without a
-    parseable PCM audio stream emit no rows."""
-    parse = _make_avi_audio_parser()
-    return _fingerprint_frame(df, parse, window, hop, bands)
 
 
 def near_duplicate_audio(

@@ -354,22 +354,6 @@ def _string_entry(d: bytes, key: bytes):
         return None
 
 
-def pdf_string_escape(val: bytes) -> bytes:
-    """Escape arbitrary bytes as a PDF ``(…)`` literal body (used by
-    the test-side fixture encryptor; inverse of :func:`_literal_bytes`)."""
-    out = bytearray()
-    for c in val:
-        if c in (0x28, 0x29, 0x5C):
-            out += b"\\" + bytes([c])
-        elif c == 0x0D:
-            out += b"\\r"
-        elif c == 0x0A:
-            out += b"\\n"
-        else:
-            out.append(c)
-    return bytes(out)
-
-
 def _hash_2b(pwd: bytes, salt: bytes, udata: bytes) -> bytes:
     """Algorithm 2.B (R6 hardened hash): SHA-256 seed, then rounds of
     64×(pwd‖K‖udata) AES-128-CBC-encrypted under K's halves, digest

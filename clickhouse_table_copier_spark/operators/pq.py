@@ -190,51 +190,3 @@ def pq_topk(
         .orderBy(F.asc("adc_dist"), F.asc(id_col))
         .limit(k)
     )
-
-
-def write_ivf_pq_layout(
-    df: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """The composed 100 TB ANN layout (IVF-PQ, the FAISS/SPANN shape):
-    rows are (id, c0..c{M-1}) parquet files PARTITIONED BY the k-means
-    cell. A query then (a) prunes to n_probe cell directories — Spark
-    partition pruning, no data read outside the probes — and (b) scans
-    only M-byte codes inside them, never a raw vector. The raw embedding
-    column is dropped at write time; at 64-dim float32 that is a ~32×
-    storage/scan reduction before compression."""
-    from clickhouse_table_copier_spark.operators.ivf import assign_cells
-
-    cells = assign_cells(df, centroids, id_col, vec_col)
-    pq_encode(cells, codebooks, id_col, vec_col, extra_cols=("cell",)).write.partitionBy(
-        "cell"
-    ).parquet(path)
-
-
-def ivf_pq_topk_stored(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ADC top-k over a :func:`write_ivf_pq_layout` store: probe cells →
-    partition-pruned scan of code columns → lookup-table distances →
-    TakeOrderedAndProject."""
-    from clickhouse_table_copier_spark.operators.ivf import probe_cells
-
-    probe = probe_cells(centroids, query_vec, n_probe)
-    store = spark.read.parquet(path).where(F.col("cell").isin(probe))
-    scored = pq_adc_scores(store, codebooks, query_vec, id_col)
-    return (
-        scored.select(id_col, F.round("adc_dist", 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
-        .limit(k)
-    )

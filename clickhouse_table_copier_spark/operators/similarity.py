@@ -92,63 +92,6 @@ def brute_force_topk(
     return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
 
 
-def cosine_scores_pandas_udf(
-    df: DataFrame,
-    query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized alternative to the expression-based :func:`cosine`.
-
-    A scalar Pandas UDF receives the embedding column as Arrow batches and
-    scores them with one numpy matmul per batch — the shape a model-based
-    scorer (re-ranker, learned metric) plugs into. For the plain dot
-    product the JVM expression path wins below ~10k dims; this exists as
-    the documented Arrow on-ramp and is asserted equal to the expression
-    path in tests.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    @pandas_udf("double")
-    def score(vecs: pd.Series) -> pd.Series:
-        m = np.asarray(vecs.tolist(), dtype=np.float64)  # (batch, dim)
-        dots = m @ q
-        norms = np.sqrt((m * m).sum(axis=1))
-        return pd.Series(dots / (norms * qn))
-
-    return df.select(F.col(id_col), score(F.col(vec_col)).alias("cosine_sim"))
-
-
-def label_centroids_grouped_map(
-    df: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-label centroid via ``applyInPandas`` (grouped-map Pandas API).
-
-    The batch grouped-map shape: one Arrow-batched pandas call per key
-    group — where per-group model fitting / re-ranking plugs in. For a
-    plain mean the expression path is competitive; this is the documented
-    grouped-map on-ramp, tested equal to the expression-computed centroid.
-    """
-    schema = f"{label_col} int, centroid array<double>, n_vectors long"
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-        return pd.DataFrame(
-            {
-                label_col: [int(pdf[label_col].iloc[0])],
-                "centroid": [list(m.mean(axis=0))],
-                "n_vectors": [len(pdf)],
-            }
-        )
-
-    return df.select(label_col, vec_col).groupBy(label_col).applyInPandas(fit, schema)
-
-
 def hyperplane_lsh_buckets(
     df: DataFrame,
     num_planes: int = 8,

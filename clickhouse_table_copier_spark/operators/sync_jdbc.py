@@ -23,6 +23,7 @@ exists is decided by ``sources.catalog.table_exists``.
 from __future__ import annotations
 
 import datetime
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,6 +58,8 @@ def sql_equality_where(
             return "TRUE" if v else "FALSE"
         if isinstance(v, (int, float)):
             return str(v)
+        if isinstance(v, Decimal):  # a plain numeric literal, never '1.50'
+            return format(v, "f")
         if isinstance(v, (datetime.date, datetime.datetime)):
             return f"'{v}'"
         s = str(v)

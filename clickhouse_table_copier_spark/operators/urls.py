@@ -75,26 +75,6 @@ def url_domain(host: Column | str) -> Column:
     )
 
 
-def url_tld(host: Column | str) -> Column:
-    h = F.col(host) if isinstance(host, str) else host
-    return F.element_at(F.split(h, "\\."), -1)
-
-
-def url_path_depth(url: Column | str) -> Column:
-    """Number of non-empty path segments (``/a/b/c`` → 3; ``/`` → 0)."""
-    u = F.col(url) if isinstance(url, str) else url
-    path = F.coalesce(F.try_parse_url(u, F.lit("PATH")), F.lit(""))
-    segs = F.filter(F.split(path, "/"), lambda s: s != "")
-    return F.size(segs)
-
-
-def url_query_param_count(url: Column | str) -> Column:
-    u = F.col(url) if isinstance(url, str) else url
-    q = F.coalesce(F.try_parse_url(u, F.lit("QUERY")), F.lit(""))
-    # empty segments (?a=1&&b=2, trailing &) are not params
-    return F.size(F.filter(F.split(q, "&"), lambda s: s != ""))
-
-
 def canonical_url(url: Column | str) -> Column:
     """Dedup key: lowercase scheme+host, strip DEFAULT ports only
     (http:80 / https:443 — an explicit non-default port is a different

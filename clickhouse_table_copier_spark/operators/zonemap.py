@@ -92,25 +92,3 @@ def prune_files(
         (F.col(f"max_{col}") >= F.lit(lo)) & (F.col(f"min_{col}") <= F.lit(hi))
     )
     return [r["file_path"] for r in hit.select("file_path").collect()]
-
-
-def read_pruned(
-    spark: SparkSession, zmap: DataFrame, col: str, lo, hi
-) -> DataFrame:
-    """Zone-map-aware read: scan ONLY the files whose [min, max] for
-    ``col`` intersects [lo, hi], with the range predicate re-applied (zone
-    maps are file-granular; rows inside a surviving file still need the
-    filter). Returns an empty DataFrame with the manifest's data schema
-    when no file survives. This is the usable form of :func:`prune_files`
-    — no hand-plumbing of file lists.
-    """
-    files = prune_files(zmap, col, lo, hi)
-    pred_lo, pred_hi = (F.col(col) >= F.lit(lo)), (F.col(col) <= F.lit(hi))
-    if not files:
-        # derive the schema from one manifest file so callers get a
-        # well-typed empty result
-        any_file = [r["file_path"] for r in zmap.select("file_path").limit(1).collect()]
-        if not any_file:
-            raise ValueError("zone map is empty; nothing to infer a schema from")
-        return spark.read.parquet(any_file[0]).where(F.lit(False))
-    return spark.read.parquet(*files).where(pred_lo & pred_hi)

@@ -3,9 +3,9 @@ anomaly detection.
 
 - ``key_skew_report`` — the pre-shuffle diagnostic a join/agg planner
   needs: per join-key hotness report with an integer-exact skew verdict
-  (count·n_keys > factor·total — no division, no float boundary). The
-  repo's salting and AQE-skew levers exist (operators/skew.py); this is
-  the query that tells you WHEN to pull them.
+  (count·n_keys > factor·total — no division, no float boundary). It
+  is the query that tells you WHEN to salt a key or lean on AQE's skew
+  join.
 - ``weekly_seasonal_anomalies`` — day-of-week seasonal baseline per
   event type with z-scored residuals: variance from integer-exact
   moment sums, σ via IEEE-correctly-rounded sqrt, so the flags cross

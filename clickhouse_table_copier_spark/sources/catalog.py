@@ -14,11 +14,9 @@ process (SURVEY §3.3).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 
-from clickhouse_table_copier_spark.sources.table import TableRef, jdbc_execute, jdbc_retry_policy
+from clickhouse_table_copier_spark.sources.table import TableRef, jdbc_execute, jdbc_retrying
 
 
 def describe_table(df: DataFrame) -> list[tuple[str, str]]:
@@ -64,16 +62,14 @@ def table_exists(spark: SparkSession, ref: TableRef) -> bool:
     if ref.fmt != "jdbc":
         path = spark._jvm.org.apache.hadoop.fs.Path(ref.location)
         return path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path)
-    retries, delay = jdbc_retry_policy(ref)
-    attempt = 0
-    while True:
+
+    def probe() -> bool:
         try:
             jdbc_execute(spark, ref, f"SELECT 1 FROM {ref.table} WHERE 1=0")
             return True
         except Exception as e:
             if any(s in _TABLE_MISSING_SQLSTATES for s in _sql_states(e)):
                 return False
-            if 0 <= retries <= attempt:
-                raise
-            attempt += 1
-            time.sleep(delay)
+            raise
+
+    return jdbc_retrying(ref, probe)

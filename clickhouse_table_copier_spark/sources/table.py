@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +59,7 @@ class TableRef:
 
 
 _RETRY_KEYS = ("connect_retries", "retry_delay_s")
+R = TypeVar("R")
 
 
 def jdbc_reader_options(ref: TableRef) -> dict[str, str]:
@@ -94,6 +95,23 @@ def jdbc_retry_policy(ref: TableRef) -> tuple[int, float]:
     retries = int(ref.options.get("connect_retries", 2))
     delay = float(ref.options.get("retry_delay_s", 5.0))
     return retries, delay
+
+
+def jdbc_retrying(ref: TableRef, call: Callable[[], R]) -> R:
+    """``call()`` under the C9 reconnect knobs: a failure is retried every
+    ``retry_delay_s`` seconds, at most ``connect_retries`` times, and
+    re-raised once they are spent. The reference loops forever
+    (``connect_retries=-1``); bounded N re-raises after N retries."""
+    retries, delay = jdbc_retry_policy(ref)
+    attempt = 0
+    while True:
+        try:
+            return call()
+        except Exception:
+            if 0 <= retries <= attempt:
+                raise
+            attempt += 1
+            time.sleep(delay)
 
 
 def normalize_jdbc_types(df: DataFrame) -> DataFrame:
@@ -147,19 +165,7 @@ def load_table(
                 reader = reader.option(k, v)
             return normalize_jdbc_types(reader.load())
 
-        loader = _loader or _do_load
-        retries, delay = jdbc_retry_policy(ref)
-        attempt = 0
-        while True:
-            try:
-                return loader()
-            except Exception:
-                # C9: the reference loops forever (connect_retries=-1);
-                # bounded N re-raises after N retries
-                if 0 <= retries <= attempt:
-                    raise
-                attempt += 1
-                time.sleep(delay)
+        return jdbc_retrying(ref, _loader or _do_load)
     raise ValueError(f"unsupported table format: {ref.fmt!r}")
 
 
@@ -225,8 +231,3 @@ def jdbc_execute(spark: SparkSession, ref: TableRef, sql: str) -> None:
         st.close()
     finally:
         conn.close()
-
-
-def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one of the fixture tables from a scale-factor directory."""
-    return spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")

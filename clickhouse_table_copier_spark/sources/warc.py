@@ -90,83 +90,6 @@ def _gzip_members(data: bytes) -> Iterator[bytes]:
         yield bytes(out)
 
 
-def _gzip_members_from_file(fobj) -> Iterator[bytes]:
-    """Streaming twin of :func:`_gzip_members`: inflate member-at-a-
-    time reading fixed-size chunks from an OPEN FILE, so the compressed
-    shard is never resident — peak memory is one inflated member plus
-    the 1 MiB read buffer.  Same salvage contract: a corrupt or
-    truncated member ends the walk at the last whole record."""
-    chunk_size = 1 << 20
-    pending = b""
-    while True:
-        if not pending:
-            pending = fobj.read(chunk_size)
-            if not pending:
-                return  # clean end of shard
-        d = zlib.decompressobj(wbits=47)
-        out = bytearray()
-        try:
-            while not d.eof:
-                out += d.decompress(pending)
-                if d.eof:
-                    break
-                pending = fobj.read(chunk_size)
-                if not pending:
-                    return  # truncated final member: salvage the prefix
-        except zlib.error:
-            return  # bit-flipped member
-        pending = d.unused_data
-        yield bytes(out)
-
-
-def _records_from_file(fobj) -> Iterator[bytes]:
-    """Streaming twin of :func:`_split_records` for plain ``.warc``:
-    walk Content-Length-framed records from an open file through a
-    bounded buffer (one record + one read chunk resident)."""
-    chunk_size = 1 << 20
-    buf = bytearray()
-    while True:
-        while b"\r\n\r\n" not in buf:
-            got = fobj.read(chunk_size)
-            if not got:
-                return
-            buf += got
-        if buf[:5] != b"WARC/":
-            return
-        hdr_end = buf.find(b"\r\n\r\n")
-        length = None
-        for line in bytes(buf[:hdr_end]).split(b"\r\n"):
-            k, _, v = line.partition(b":")
-            if k.strip().lower() == b"content-length":
-                try:
-                    length = int(v.strip())
-                except ValueError:
-                    return  # malformed header: salvage the prefix
-        if length is None:
-            return
-        end = hdr_end + 4 + length
-        while len(buf) < end:
-            got = fobj.read(chunk_size)
-            if not got:
-                return  # shard cut mid-payload: drop the partial record
-            buf += got
-        yield bytes(buf[:end])
-        del buf[:end]
-        while True:  # inter-record CRLFs, possibly split across reads
-            if len(buf) < 2:
-                got = fobj.read(chunk_size)
-                if got:
-                    buf += got
-                elif not buf:
-                    return  # clean end
-                else:
-                    break
-            if buf[:2] == b"\r\n":
-                del buf[:2]
-            else:
-                break
-
-
 def _split_records(raw: bytes) -> Iterator[bytes]:
     """Walk concatenated uncompressed WARC records via Content-Length."""
     pos = 0
@@ -428,65 +351,6 @@ def _record_batches(
         yield pd.DataFrame(rows, columns=cols)
 
 
-def read_warc_stream(
-    spark: SparkSession, paths, batch_records: int = 256
-) -> DataFrame:
-    """Streaming twin of :func:`read_warc` for EXECUTOR-VISIBLE paths
-    (local / NFS / fuse-mounted object storage): each task OPENS its
-    shard and walks it incrementally, so the per-task memory floor
-    drops to (one inflated member) + (one Arrow batch) + (a 1 MiB read
-    buffer) — the whole compressed shard is NEVER resident, unlike
-    ``read_warc``'s ``binaryFile`` path.  Use this when shards are
-    mounted; use ``read_warc`` for URLs only ``binaryFile`` can reach.
-
-    ``paths``: a glob string (driver-side ``glob.glob``; a directory
-    is treated as ``dir/*``) or an explicit list of paths.  One task
-    per shard (the shard stays the unit of parallelism)."""
-    import glob as _glob
-    import os as _os
-
-    if isinstance(paths, str):
-        files = sorted(_glob.glob(paths))
-    else:
-        files = [str(p) for p in paths]
-    # a matched directory means its shards: expand one level
-    files = [
-        f
-        for p in files
-        for f in (
-            sorted(_glob.glob(_os.path.join(p, "*")))
-            if _os.path.isdir(p)
-            else [p]
-        )
-    ]
-    files = [f for f in files if _os.path.isfile(f)]
-    if not files:
-        raise ValueError(f"read_warc_stream: no files match {paths!r}")
-    pdf = spark.createDataFrame([(p,) for p in files], "path string")
-    # round-robin (NOT hash-by-path): hashing N paths into N partitions
-    # collides ~1/e of them, stacking multi-GB shards in one task while
-    # others sit empty — plain repartition distributes exactly one per
-    # partition
-    pdf = pdf.repartition(len(files))
-
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for path_ in b["path"]:
-                with open(path_, "rb") as f:
-                    head = f.read(2)
-                    f.seek(0)
-                    records = (
-                        _gzip_members_from_file(f)
-                        if head == b"\x1f\x8b"
-                        else _records_from_file(f)
-                    )
-                    yield from _record_batches(
-                        path_, records, batch_records
-                    )
-
-    return pdf.mapInPandas(expand, WARC_SCHEMA)
-
-
 # BOM sniff table, longest-prefix first (UTF-32 LE before UTF-16 LE —
 # they share \xff\xfe).  The GENERIC utf-16/utf-32 codecs consume the
 # BOM (like utf-8-sig does), so every BOM'd encoding of the same page
@@ -682,39 +546,6 @@ def responses_to_media(warc_df: DataFrame, kind: str = "image") -> DataFrame:
                 F.col("content_type").alias("content_type"),
             )
         ).alias("meta_json"),
-    )
-
-
-def conversions_to_documents(warc_df: DataFrame) -> DataFrame:
-    """conversion records → ``(doc_id, url, fetched_at, text)`` — the
-    Common Crawl **WET** shape, the single most common off-the-shelf
-    LLM-corpus input: WET shards are ordinary WARC files whose
-    ``WARC-Type: conversion`` records carry the crawl's PRE-EXTRACTED
-    plain text, so :func:`read_warc` / :func:`read_warc_stream` already
-    read them and this projection is the only missing piece.
-
-    Pure-Column (zero Python): WET text is UTF-8 by spec, and the CAST
-    (not ``decode()``) defers validation so a rogue non-UTF-8 byte
-    degrades to replacement characters instead of killing the job under
-    ANSI mode — the same ingest discipline as
-    :func:`responses_to_documents`'s fast path.  A UTF-8 BOM, present
-    on a small fraction of real WET records, is stripped.
-
-    doc_id = deterministic xxhash64 of (warc_file, record_idx), the
-    same provenance rule every other WARC projection uses, so a page's
-    WET text and its raw ``response`` twin (when both shards are read)
-    get DIFFERENT ids — they are different artifacts of the same fetch,
-    joinable on ``url`` + ``fetched_at``."""
-    from pyspark.sql import functions as F
-
-    text = F.col("payload").cast("string")
-    return warc_df.where(F.col("warc_type") == "conversion").select(
-        F.xxhash64("warc_file", "record_idx").alias("doc_id"),
-        F.col("target_uri").alias("url"),
-        F.col("warc_date").alias("fetched_at"),
-        F.when(
-            text.startswith("\ufeff"), F.substring(text, 2, 2147483647)
-        ).otherwise(text).alias("text"),
     )
 
 

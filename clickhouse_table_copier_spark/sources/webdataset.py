@@ -116,78 +116,6 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_webdataset_stream(
-    spark: SparkSession, paths, batch_members: int = 256
-) -> DataFrame:
-    """Streaming twin of :func:`read_webdataset` for EXECUTOR-VISIBLE
-    paths (local / NFS / fuse mounts): each task OPENS its tar shard
-    and walks it in tarfile PIPE mode (``r|*`` — sequential read, no
-    seeking), flushing an Arrow batch every ``batch_members`` members —
-    the per-task memory floor drops to one member + one batch; the
-    shard is never resident, unlike the ``binaryFile`` path.  A sample
-    whose fields straddle a batch boundary is still grouped correctly
-    (``group_samples`` shuffles on (shard, key), not batch locality).
-    Same member naming/skipping semantics, one task per shard.
-    ``paths``: a glob string (a matched directory expands one level)
-    or an explicit list."""
-    import glob as _glob
-    import os as _os
-
-    if isinstance(paths, str):
-        files = sorted(_glob.glob(paths))
-    else:
-        files = [str(p) for p in paths]
-    files = [
-        f
-        for p in files
-        for f in (
-            sorted(_glob.glob(_os.path.join(p, "*")))
-            if _os.path.isdir(p)
-            else [p]
-        )
-    ]
-    files = [f for f in files if _os.path.isfile(f)]
-    if not files:
-        raise ValueError(f"read_webdataset_stream: no files match {paths!r}")
-    pdf = spark.createDataFrame([(p,) for p in files], "path string")
-    # round-robin (NOT hash-by-path): hashing N paths into N partitions
-    # collides ~1/e of them, stacking multi-GB shards in one task while
-    # others sit empty — plain repartition distributes exactly one per
-    # partition
-    pdf = pdf.repartition(len(files))
-
-    cols = ["shard", "member_idx", "key", "field", "content"]
-
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for path_ in b["path"]:
-                rows = []
-                with tarfile.open(path_, mode="r|*") as tf:
-                    for i, m in enumerate(tf):
-                        if not m.isfile():
-                            continue
-                        f = tf.extractfile(m)
-                        if f is None:
-                            continue
-                        name = m.name
-                        base_start = name.rfind("/") + 1
-                        dot = name.find(".", base_start)
-                        if dot == -1:
-                            key, field = name, ""
-                        else:
-                            key, field = name[:dot], name[dot + 1 :]
-                        rows.append(
-                            (path_, i, key, field, bytearray(f.read()))
-                        )
-                        if len(rows) >= batch_members:
-                            yield pd.DataFrame(rows, columns=cols)
-                            rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return pdf.mapInPandas(expand, MEMBER_SCHEMA)
-
-
 def group_samples(members: DataFrame) -> DataFrame:
     """Member rows → one row per sample: ``(shard, key,
     parts map<field, binary>)``.  Two shuffles — (shard, key, field)

@@ -76,26 +76,6 @@ def incremental_partition_stats(
     )
 
 
-def merged_incremental_stats(spark: SparkSession, output_dir: str, partition_name: str) -> DataFrame:
-    """Fold the per-batch deltas back into absolute per-partition stats.
-
-    In ``complete`` output mode each batch rewrites full aggregates, so
-    the latest batch per partition is authoritative; take it via max
-    batch_id. (A real deployment would use Delta MERGE; plain parquet
-    keeps this container-friendly.)
-    """
-    deltas = spark.read.parquet(output_dir)
-    latest = deltas.groupBy(partition_name).agg(F.max("batch_id").alias("batch_id"))
-    return (
-        deltas.join(latest, [partition_name, "batch_id"])
-        .select(
-            partition_name,
-            F.col("rows_delta").alias("rows"),
-            F.col("fingerprint_delta").alias("fingerprint"),
-        )
-    )
-
-
 def session_window_stats(
     spark: SparkSession,
     source_dir: str,

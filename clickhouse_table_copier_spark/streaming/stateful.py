@@ -19,26 +19,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-USER_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value_cents", T.LongType()),
-        T.StructField("first_ts", T.TimestampType()),
-        T.StructField("last_ts", T.TimestampType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value_cents", T.LongType()),
-        T.StructField("first_ts", T.TimestampType()),
-        T.StructField("last_ts", T.TimestampType()),
-    ]
-)
-
-
 def _make_update_user_stats():
     """Build the state-update function as a CLOSURE, not a module-level
     function: cloudpickle serializes closures by value, while module-level
@@ -76,50 +56,6 @@ def _make_update_user_stats():
         )
 
     return update
-
-
-def stateful_user_stats(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    output_dir: str,
-    checkpoint_dir: str,
-):
-    """availableNow run maintaining per-user lifetime stats in GroupState.
-
-    Each run emits the UPDATED stats row per user seen in that run's new
-    files; rows for untouched users stay in state, not in output. The
-    latest emitted row per user (max batch over runs) is the current value
-    — resolved by :func:`latest_user_stats`.
-    """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(source_dir)
-    )
-    if isinstance(stream.schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    updated = stream.groupBy("user_id").applyInPandasWithState(
-        _make_update_user_stats(),
-        outputStructType=USER_STATS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # batch ids keep increasing across availableNow runs (checkpointed)
-        batch_df.withColumn("batch_seq", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(output_dir)
-
-    return (
-        updated.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def latest_user_stats(spark: SparkSession, output_dir: str) -> DataFrame:

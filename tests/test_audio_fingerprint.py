@@ -165,13 +165,11 @@ def _avi_with_audio(frames, w, h, samples, sr=_SR, fps=10):
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def test_video_soundtrack_matches_standalone_wav(spark):
-    """A video's PCM audio track fingerprints IDENTICALLY to the same
-    samples exported as WAV — soundtrack↔clip dedup across containers,
-    and the video's visual frames still decode (both streams
-    coexist)."""
+def test_video_frames_decode_beside_audio_track(spark):
+    """An AVI interleaving a PCM audio stream (``01wb`` chunks) with its
+    MJPEG frames: the frame walk takes the visual stream only, so all
+    three frames decode."""
     from clickhouse_table_copier_spark.operators.multimodal import (
-        video_audio_fingerprint,
         video_frame_features,
     )
     from tests.test_jpeg_decode import encode_baseline_jpeg
@@ -180,42 +178,14 @@ def test_video_soundtrack_matches_standalone_wav(spark):
     imgs = [
         rng.integers(0, 256, (16, 16, 3), dtype=np.uint8) for _ in range(3)
     ]
-    samples = _noise(42, _SR * 2)
     avi = _avi_with_audio(
-        [encode_baseline_jpeg(im) for im in imgs], 16, 16, samples
+        [encode_baseline_jpeg(im) for im in imgs], 16, 16, _noise(42, _SR * 2)
     )
     vdf = spark.createDataFrame(
         [(1, "video", bytearray(avi), "{}")], MEDIA_SCHEMA
     )
-    adf = spark.createDataFrame(_media([(2, samples)]), MEDIA_SCHEMA)
-    from_video = {
-        r["frame_idx"]: r["fhash"]
-        for r in video_audio_fingerprint(vdf, window=_WIN, hop=_HOP).collect()
-    }
-    from_wav = {
-        r["frame_idx"]: r["fhash"]
-        for r in audio_fingerprint(adf, window=_WIN, hop=_HOP).collect()
-    }
-    assert from_video and from_video == from_wav
-    # the visual stream still decodes: 3 frames of real pixels
     idxs = sorted(r["frame_idx"] for r in video_frame_features(vdf).collect())
     assert idxs == [0, 1, 2]
-
-
-def test_video_without_audio_stream_emits_nothing(spark):
-    from clickhouse_table_copier_spark.operators.multimodal import (
-        video_audio_fingerprint,
-    )
-    from tests.test_jpeg_decode import encode_baseline_jpeg
-    from tests.test_video_frames import make_mjpeg_avi
-
-    rng = np.random.default_rng(8)
-    img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    avi = make_mjpeg_avi([encode_baseline_jpeg(img)], 16, 16)
-    vdf = spark.createDataFrame(
-        [(1, "video", bytearray(avi), "{}")], MEDIA_SCHEMA
-    )
-    assert video_audio_fingerprint(vdf).collect() == []
 
 
 def test_wave_format_extensible_decodes(spark):

@@ -613,12 +613,15 @@ def test_reserved_mct_declines():
     assert decode_jp2_pdf(bad) is None
 
 
-def test_warc_jp2_response_meets_jpx_pdf_in_media(spark, tmp_path):
+@pytest.mark.parametrize("egress", ["plain", "zstd_egress"])
+def test_warc_jp2_response_meets_jpx_pdf_in_media(spark, tmp_path, egress):
     """Crawl e2e: an image/jp2 WARC response and a /JPXDecode PDF
     figure of the same raster land in ONE media table and pair at
     hamming 0 — the JP2 crawl path (responses_to_media → raster
     chain) and the JPX PDF path (responses_to_pdfs →
-    extract_pdf_images) meet in the same dedup join."""
+    extract_pdf_images) meet in the same dedup join.  ``zstd_egress``
+    first republishes the crawl through write_warc as .warc.zst and
+    reads that back (egress → ingest symmetry)."""
     from clickhouse_table_copier_spark.operators.multimodal import (
         near_duplicate_images,
     )
@@ -629,6 +632,7 @@ def test_warc_jp2_response_meets_jpx_pdf_in_media(spark, tmp_path):
         read_warc,
         responses_to_media,
         responses_to_pdfs,
+        write_warc,
     )
     from tests.test_warc import _record
 
@@ -664,6 +668,10 @@ def test_warc_jp2_response_meets_jpx_pdf_in_media(spark, tmp_path):
     with open(p, "wb") as f:
         f.write(b"".join(recs))
     warc = read_warc(spark, str(p))
+    if egress == "zstd_egress":
+        out = str(tmp_path / "republished")
+        write_warc(warc, out, n_shards=1, compression="zstd")
+        warc = read_warc(spark, out)
     media = responses_to_media(warc).unionByName(
         extract_pdf_images(responses_to_pdfs(warc), "pdf_bytes", "doc_id")
     )
@@ -770,26 +778,48 @@ def test_tag_tree_lazy_paths():
     assert t._path(0) is p
 
 
-def test_jp2_image_meta_xlbox(spark):
+def _xlbox_spelling(jp2: bytes) -> bytes:
+    """Rewrite the jp2h box in XLBox form (size field == 1, 64-bit
+    length after the type) — the extended-length spelling large .jp2
+    files use."""
+    import struct
+
+    at = jp2.index(b"jp2h") - 4
+    size = struct.unpack(">I", jp2[at : at + 4])[0]
+    xl = (
+        b"\x00\x00\x00\x01" + b"jp2h"
+        + struct.pack(">Q", size + 8) + jp2[at + 8 : at + size]
+    )
+    return jp2[:at] + xl + jp2[at + size :]
+
+
+@pytest.mark.parametrize("spelling", ["xlbox", "truncated"])
+def test_jp2_image_meta_xlbox(spark, spelling):
     """XLBox form (box size field == 1, 64-bit length after the
     type): decode_image_meta must walk it like
     jpeg2000._jp2_codestream does (ADVICE r14 — it used to treat 1 as
-    the length and report (-1, -1) for valid files)."""
+    the length and report (-1, -1) for valid files), and the decoder
+    edge accepts it.  A codestream cut after its SIZ marker keeps its
+    header dims (metadata is not a decode) while the decoder
+    declines it."""
     from clickhouse_table_copier_spark.operators.multimodal import (
         decode_image_meta,
     )
-    from clickhouse_table_copier_spark.queries_round16_prep import (
-        _xlbox_spelling,
-    )
 
-    boxed = _xlbox_spelling(MKG.make_jp2(J2K_GRAY8_L1, 8, 8, 1))
+    if spelling == "xlbox":
+        blob = _xlbox_spelling(MKG.make_jp2(J2K_GRAY8_L1, 8, 8, 1))
+    else:
+        blob = J2K_GRAY8_L1[:40]
     media = spark.createDataFrame(
-        [(1, bytearray(boxed))], "media_id long, content binary",
+        [(1, bytearray(blob))], "media_id long, content binary",
     )
     row = decode_image_meta(media).collect()[0]
     assert (row["fmt"], row["width"], row["height"]) == ("jp2", 8, 8)
-    # the decoder edge accepts the same spelling
-    assert (decode_jp2_pdf(boxed) == _gray8()).all()
+    got = decode_jp2_pdf(blob)
+    if spelling == "xlbox":
+        assert (got == _gray8()).all()
+    else:
+        assert got is None
 
 
 # --------------------------------------------------------------------

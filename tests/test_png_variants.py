@@ -427,31 +427,6 @@ def test_zero_area_images_decline():
     assert _make_bmp_raster_decoder()(bytes(bad)) is None
 
 
-def test_resize_covers_bmp(spark):
-    """resize_images decodes BMP like every other raster container and
-    re-encodes at the target size (not the pass-through fallback)."""
-    from clickhouse_table_copier_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _make_png_raster_decoder,
-        resize_images,
-    )
-
-    rng = np.random.default_rng(33)
-    pal = [tuple(int(x) for x in rng.integers(0, 256, 3)) for _ in range(4)]
-    idx = rng.integers(0, 4, (16, 16), dtype=np.uint8)
-    bmp = _bmp_paletted(16, 16, idx, pal, 8)
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(bmp), '{"fmt":"bmp"}')], MEDIA_SCHEMA
-    )
-    out = resize_images(df, 8, 8).collect()
-    dec = _make_png_raster_decoder()
-    got = dec(bytes(out[0]["content"]))
-    assert got is not None and got[:3] == (8, 8, 3)
-    rgb = np.array(pal, dtype=np.uint8)[idx]
-    xs = (np.arange(8) * 16) // 8
-    assert np.array_equal(got[3], rgb[xs][:, xs])
-
-
 def _bmp_bitfields(w, h, pixels, bpp, masks, hdr_size=40, topdown=False):
     """Build a BI_BITFIELDS BMP: ``pixels`` is an (h, w) array of raw
     16/32-bit pixel values (top-down), ``masks`` = (r, g, b[, a]).

@@ -3,8 +3,10 @@
 Every step runs against both destination kinds, a parquet directory and a
 Derby JDBC table: bootstrap, a resync over one mutated, one missing and
 one extra partition, the delete-only path and a dry run. The partition
-keys include NULL; on parquet also a value Spark escapes in directory
-names (``a/b``). After each step the destination's partition fingerprints
+keys include NULL, and each destination runs once more per edge key type:
+``date``, microsecond ``timestamp`` and ``decimal(10,2)`` keys, and on
+parquet string keys Spark escapes in directory names (``/ = % :``) or
+carries as they are (a space, non-ASCII text). After each step the destination's partition fingerprints
 must equal the source's, and the report must say what changed on disk or
 in the table. A run that fails at a phase boundary (report collected,
 JDBC rows deleted, parquet directories about to be removed) is repaired
@@ -17,6 +19,7 @@ import datetime
 import os
 import uuid
 from dataclasses import replace
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,23 +33,70 @@ DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 SPEC = PartitionSpec.bare("k")
 
 
+# variant -> (key type, keys, parquet directory names of those keys). The
+# keys are two source keys and one destination-only key; every variant adds
+# NULL as a third source key. Spark writes a NULL string to Derby as a
+# CLOB, which no comparable column type accepts, so string keys run on
+# parquet only.
+KEYS = {
+    "string": ("string", ("a/b", "x", "zz"), ("a%2Fb", "x", "zz")),
+    "escapes": (
+        "string",
+        ("k=1%:2", "naïve café 東京", "a b"),
+        ("k%3D1%25%3A2", "naïve café 東京", "a b"),
+    ),
+    "date": (
+        "date",
+        (datetime.date(2024, 2, 29), datetime.date(2024, 3, 1), datetime.date(1999, 12, 31)),
+        ("2024-02-29", "2024-03-01", "1999-12-31"),
+    ),
+    "timestamp": (
+        "timestamp",
+        (
+            datetime.datetime(2024, 1, 1, 10, 0, 0, 123456),
+            datetime.datetime(2024, 1, 1, 10, 0, 0, 123457),
+            datetime.datetime(1999, 12, 31, 23, 59, 59, 999999),
+        ),
+        (
+            "2024-01-01 10%3A00%3A00.123456",
+            "2024-01-01 10%3A00%3A00.123457",
+            "1999-12-31 23%3A59%3A59.999999",
+        ),
+    ),
+    "decimal": (
+        "decimal(10,2)",
+        (Decimal("1.50"), Decimal("-2.25"), Decimal("99999999.99")),
+        ("1.50", "-2.25", "99999999.99"),
+    ),
+    "bigint": ("bigint", (1, 2, 9), ("1", "2", "9")),
+}
+DEST_KINDS = [
+    "parquet", "jdbc",
+    "parquet-escapes", "parquet-date", "parquet-timestamp", "parquet-decimal",
+    "jdbc-date", "jdbc-timestamp", "jdbc-decimal",
+]
+
+
 def _dest(kind: str, tmp_path):
     """(destination, its three source keys and one destination-only key,
-    the key column's type)."""
-    if kind == "parquet":
-        return TableRef(location=str(tmp_path / "dest")), (None, "a/b", "x", "zz"), "string"
-    # Spark writes a NULL string to Derby as a CLOB, which no comparable
-    # column type accepts, so the Derby table is keyed by integers
+    the key column's type, the parquet directory names of those keys)
+    for ``kind`` = ``parquet``/``jdbc`` with an optional ``-variant``."""
+    fmt, _, variant = kind.partition("-")
+    key_type, (a, b, extra), dirs = KEYS[variant or ("string" if fmt == "parquet" else "bigint")]
+    dirs = ("__HIVE_DEFAULT_PARTITION__",) + dirs
+    keys = (None, a, b, extra)
+    if fmt == "parquet":
+        return TableRef(location=str(tmp_path / "dest")), keys, key_type, dirs
     ref = TableRef(
         location=f"jdbc:derby:memory:pipe{uuid.uuid4().hex};create=true",
         fmt="jdbc",
         table="t",
         options={"driver": DERBY_DRIVER},
     )
-    return ref, (None, 1, 2, 9), "bigint"
+    return ref, keys, key_type, dirs
 
 
-@pytest.fixture(params=["parquet", "jdbc"])
+@pytest.fixture(params=DEST_KINDS)
 def dest(request, tmp_path):
     return _dest(request.param, tmp_path)
 
@@ -78,7 +128,7 @@ def _report(res) -> dict:
 
 
 def test_pipeline_steps(spark, dest):
-    dest, (null, a, b, extra), key_type = dest
+    dest, (null, a, b, extra), key_type, dirs = dest
     schema = f"id BIGINT, k {key_type}, v BIGINT"
     rows = [(1, null, 10), (2, null, 20), (3, a, 30), (4, b, 40), (5, b, 50)]
     src = spark.createDataFrame(rows, schema)
@@ -92,7 +142,7 @@ def test_pipeline_steps(spark, dest):
     assert (res.copied_partitions, res.deleted_partitions) == (3, 0)
     assert fp(load_table(spark, dest)) == src_fp
     if dest.fmt == "parquet":
-        assert _dirs(dest) == {"k=__HIVE_DEFAULT_PARTITION__", "k=a%2Fb", "k=x"}
+        assert _dirs(dest) == {f"k={d}" for d in dirs[:3]}
 
     # 2. resync: NULL partition mutated, `a` missing, `extra` only in dest
     drifted = spark.createDataFrame([(1, null, 11), (2, null, 20), (4, b, 40), (5, b, 50)], schema)
@@ -119,7 +169,7 @@ def test_pipeline_steps(spark, dest):
     assert (res.copied_partitions, res.deleted_partitions) == (0, 3)
     assert fp(load_table(spark, dest)) == extra_fp
     if dest.fmt == "parquet":
-        assert _dirs(dest) == {"k=zz"}
+        assert _dirs(dest) == {f"k={dirs[3]}"}
 
     # 4. dry run: reports the three missing partitions, changes nothing
     res = sync(spark, src, dest, SPEC, SyncOptions(dry_run=True))
@@ -159,7 +209,7 @@ def test_crash_at_phase_boundary_converges(spark, tmp_path, monkeypatch, kind, b
     from clickhouse_table_copier_spark.operators import sync as sync_mod
     from clickhouse_table_copier_spark.operators import sync_jdbc
 
-    dest, (null, a, b, extra), key_type = _dest(kind, tmp_path)
+    dest, (null, a, b, extra), key_type, _ = _dest(kind, tmp_path)
     schema = f"id BIGINT, k {key_type}, v BIGINT"
     src = spark.createDataFrame([(1, null, 10), (2, null, 20), (3, a, 30), (4, b, 40)], schema)
     extra_row = spark.createDataFrame([(6, extra, 60)], schema)

@@ -7,9 +7,6 @@ from clickhouse_table_copier_spark.operators.urls import (
     filter_blocklisted,
     url_domain,
     url_host,
-    url_path_depth,
-    url_query_param_count,
-    url_tld,
 )
 
 
@@ -24,15 +21,9 @@ def test_url_parts(spark):
     row = df.select(
         url_host("u").alias("host"),
         url_domain(url_host("u")).alias("dom"),
-        url_tld(url_host("u")).alias("tld"),
-        url_path_depth("u").alias("depth"),
-        url_query_param_count("u").alias("nq"),
     ).collect()[0]
     assert row["host"] == "sub.example.co.uk"
     assert row["dom"] == "example.co.uk"  # second-level public suffix
-    assert row["tld"] == "uk"
-    assert row["depth"] == 3
-    assert row["nq"] == 2
 
 
 def test_domain_plain_tld(spark):
@@ -94,11 +85,6 @@ def test_non_default_port_is_a_distinct_origin(spark):
         _one(spark, "https://e.com:443/p", canonical_url("u"))
         == "https://e.com/p"
     )
-
-
-def test_param_count_ignores_empty_segments(spark):
-    assert _one(spark, "http://e.com/p?a=1&&b=2", url_query_param_count("u")) == 2
-    assert _one(spark, "http://e.com/p?a=1&", url_query_param_count("u")) == 1
 
 
 def test_unparseable_urls_do_not_collapse(spark):

@@ -13,7 +13,7 @@ import numpy as np
 
 from clickhouse_table_copier_spark.operators.multimodal import (
     MEDIA_SCHEMA,
-    decode_video_meta,
+    _make_avi_parser,
     image_ahash,
     video_frame_features,
 )
@@ -46,20 +46,16 @@ def _img(seed: int, w=16, h=16) -> np.ndarray:
     return rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
 
 
-def test_avi_meta_parses(spark):
+def test_avi_meta_parses():
     frames = [encode_baseline_jpeg(_img(i)) for i in range(6)]
     avi = make_mjpeg_avi(frames, 16, 16, fps=10)
-    df = spark.createDataFrame(
-        [(1, "video", bytearray(avi), '{"fmt":"avi"}'),
-         (2, "video", bytearray(b"not a video"), "{}")],
-        MEDIA_SCHEMA,
-    )
-    rows = {r["media_id"]: r for r in decode_video_meta(df).collect()}
-    m = rows[1]
-    assert m["brand"] == "AVI " and (m["width"], m["height"]) == (16, 16)
-    assert abs(m["duration_s"] - 0.6) < 1e-9  # 6 frames at 10 fps
-    assert m["n_tracks"] == 1
-    assert rows[2]["brand"] is None  # decline, don't fabricate
+    parse = _make_avi_parser()
+    usec, total, streams, w, h, got = parse(avi)
+    assert (w, h) == (16, 16)
+    assert usec * total == 600_000  # 6 frames at 10 fps
+    assert streams == 1
+    assert got == frames
+    assert parse(b"not a video") is None  # decline, don't fabricate
 
 
 def test_frame_features_match_image_pipeline(spark):
@@ -125,7 +121,7 @@ def test_scene_change_visible_in_hash_sequence(spark):
 
 def test_rec_sublists_and_header_only_parse(spark):
     """Interleaved AVIs wrap frames in LIST 'rec ' sub-lists — the
-    frame walk must descend into them."""
+    frame walk must descend into them, and the header still parses."""
     frames = [encode_baseline_jpeg(_img(i)) for i in range(3)]
     usec = 100_000
     avih = struct.pack("<10I", usec, 0, 0, 0, 3, 0, 1, 0, 16, 16) + b"\x00" * 16
@@ -141,8 +137,7 @@ def test_rec_sublists_and_header_only_parse(spark):
     )
     idxs = sorted(r["frame_idx"] for r in video_frame_features(vdf).collect())
     assert idxs == [0, 1, 2]
-    meta = decode_video_meta(vdf).collect()[0]
-    assert meta["brand"] == "AVI " and meta["n_tracks"] == 1
+    assert _make_avi_parser()(avi) == (usec, 3, 1, 16, 16, frames)
 
 
 def test_near_duplicate_videos(spark):

@@ -295,44 +295,6 @@ def test_charset_bogus_declaration_falls_back(spark, tmp_path):
     assert "plain ascii survives" in docs[0]["raw_html"]
 
 
-def test_stream_reader_matches_binaryfile_reader(spark, tmp_path):
-    """read_warc_stream (task-side open, one-member memory floor) must
-    produce EXACTLY read_warc's rows on the same shards — both layouts,
-    including the truncated-tail salvage."""
-    from clickhouse_table_copier_spark.sources.warc import read_warc_stream
-
-    _write_shards(str(tmp_path))
-    # add a truncated gzip shard: salvage must match too
-    recs = _records()
-    with open(tmp_path / "t.warc.gz", "wb") as f:
-        for r in recs:
-            f.write(gzip.compress(r))
-        f.write(gzip.compress(_record({"WARC-Type": "response"}, b"x" * 64))[:20])
-
-    def key(rows):
-        return sorted(
-            (
-                os.path.basename(r["warc_file"]), r["record_idx"],
-                r["warc_type"], r["target_uri"], r["http_status"],
-                bytes(r["payload"]),
-            )
-            for r in rows
-        )
-
-    a = key(read_warc(spark, str(tmp_path)).collect())
-    b = key(read_warc_stream(spark, str(tmp_path)).collect())
-    assert a == b
-    assert len(a) == 12  # 4 (a.warc) + 4 (b.warc.gz) + 4 salvaged (t)
-
-
-def test_stream_reader_no_files_raises(spark, tmp_path):
-    from clickhouse_table_copier_spark.sources.warc import read_warc_stream
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        read_warc_stream(spark, str(tmp_path / "nope-*.warc"))
-
-
 def test_incremental_warc_ingest_only_processes_new_shards(spark, tmp_path):
     """Structured Streaming crawl ingest: run 1 lands shard A's
     documents; shard B arrives; run 2 appends ONLY B's documents (the
@@ -565,58 +527,6 @@ def test_chunked_salvage_and_fallback(spark, tmp_path):
     }
     assert rows["https://a.example/trunc"].startswith(b"<p>salvaged")
     assert rows["https://a.example/malformed"] == malformed
-
-
-def test_wet_conversion_records_project_to_documents(spark, tmp_path):
-    """Common Crawl WET shards are WARC files of 'conversion' records
-    carrying pre-extracted plain text — the projection must yield the
-    text verbatim (UTF-8, BOM stripped) and skip every other type."""
-    from clickhouse_table_copier_spark.sources.warc import (
-        conversions_to_documents,
-    )
-
-    wet = [
-        _record(
-            {"WARC-Type": "warcinfo", "WARC-Date": "2026-08-15T00:00:00Z"},
-            b"software: wet-writer",
-        ),
-        _record(
-            {
-                "WARC-Type": "conversion",
-                "WARC-Target-URI": "https://example.com/page",
-                "WARC-Date": "2026-08-15T00:00:02Z",
-                "Content-Type": "text/plain",
-            },
-            "Extracted prose, already text.\nSecond line — naïve café.".encode(),
-        ),
-        _record(
-            {
-                "WARC-Type": "conversion",
-                "WARC-Target-URI": "https://example.com/bom",
-                "WARC-Date": "2026-08-15T00:00:03Z",
-                "Content-Type": "text/plain",
-            },
-            "﻿BOM-prefixed text survives without the BOM.".encode(),
-        ),
-    ]
-    with open(os.path.join(str(tmp_path), "c.warc"), "wb") as f:
-        f.write(b"".join(wet))
-    docs = {
-        r["url"]: r
-        for r in conversions_to_documents(
-            read_warc(spark, str(tmp_path))
-        ).collect()
-    }
-    assert set(docs) == {"https://example.com/page", "https://example.com/bom"}
-    assert (
-        docs["https://example.com/page"]["text"]
-        == "Extracted prose, already text.\nSecond line — naïve café."
-    )
-    assert (
-        docs["https://example.com/bom"]["text"]
-        == "BOM-prefixed text survives without the BOM."
-    )
-    assert docs["https://example.com/page"]["doc_id"] is not None
 
 
 def test_wat_metadata_records_project_to_json(spark, tmp_path):

@@ -203,31 +203,3 @@ def test_entropy_mode_mix_in_one_shard_dedups(spark, tmp_path):
 
     buckets = Counter(r["ahash"] for r in rows)
     assert sorted(buckets.values()) == [1, 3]
-
-
-def test_stream_reader_matches_binaryfile_reader(spark, shard_dir):
-    """read_webdataset_stream (pipe-mode tar walk, one-member memory
-    floor) produces the SAME member rows and the same samples as the
-    binaryFile reader — including with a batch size small enough to
-    split one sample's fields across Arrow batches."""
-    from clickhouse_table_copier_spark.sources.webdataset import (
-        read_webdataset_stream,
-    )
-
-    def key(rows):
-        return sorted(
-            (os.path.basename(r["shard"]), r["member_idx"], r["key"],
-             r["field"], bytes(r["content"]))
-            for r in rows
-        )
-
-    a = key(read_webdataset(spark, shard_dir).collect())
-    b = key(read_webdataset_stream(spark, shard_dir).collect())
-    c = key(read_webdataset_stream(spark, shard_dir, batch_members=1).collect())
-    assert a == b == c
-    # sample grouping is batch-boundary-proof
-    sa = group_samples(read_webdataset(spark, shard_dir)).count()
-    sc = group_samples(
-        read_webdataset_stream(spark, shard_dir, batch_members=1)
-    ).count()
-    assert sa == sc

@@ -146,13 +146,10 @@ def test_jsonl_to_documents_projection(spark, tmp_path):
 
 def test_warc_zst_shard_reads(spark, tmp_path):
     """A .warc.zst shard parses into the same records as its plain
-    twin — conversion text included."""
+    twin."""
     from scripts.make_zstd_golden import warc_payload
 
-    from clickhouse_table_copier_spark.sources.warc import (
-        conversions_to_documents,
-        read_warc,
-    )
+    from clickhouse_table_copier_spark.sources.warc import read_warc
 
     zdir = os.path.join(str(tmp_path), "z")
     pdir = os.path.join(str(tmp_path), "p")
@@ -165,9 +162,6 @@ def test_warc_zst_shard_reads(spark, tmp_path):
     zrows = read_warc(spark, zdir).drop("warc_file").collect()
     prows = read_warc(spark, pdir).drop("warc_file").collect()
     assert sorted(map(str, zrows)) == sorted(map(str, prows))
-    wet = conversions_to_documents(read_warc(spark, zdir)).collect()
-    assert len(wet) == 1
-    assert wet[0]["text"] == "Pre-extracted text inside a zstd WARC."
 
 
 def test_warc_zst_with_embedded_dict_reads(spark, tmp_path):
