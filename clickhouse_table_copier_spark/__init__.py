@@ -10,8 +10,8 @@ partition-level table synchronizer), re-expressed Spark-first:
 - the reference diffs partitions one at a time in a driver loop
   (``/root/reference/copy/copy.go:194-266``); this engine computes all
   partition fingerprints in ONE grouped aggregation per side and classifies
-  them with a single full-outer join — the set-oriented formulation that
-  scales to 100 TB / 1000 executors.
+  them with a single aggregation over both sides — the set-oriented
+  formulation that scales to 100 TB / 1000 executors.
 
 Package layout
 --------------

@@ -1,16 +1,17 @@
-"""Partition diff — the consistency verdict join (SURVEY §2.3 J2, §2.9 C5).
+"""Partition diff — the consistency verdict aggregation (SURVEY §2.3 J2, §2.9 C5).
 
 The reference classifies each source partition against the destination in a
 driver loop (``/root/reference/copy/copy.go:194-266``): probe the dest count
 (``:215``), then paired async fingerprints (``:217-232``), then the verdict
 state machine (``:237-266``). This engine expresses the whole classification
-as ONE full-outer join of the two sides' fingerprint tables:
+as ONE aggregation over the union of the two sides' fingerprint tables:
 
-    src_fp FULL OUTER JOIN dest_fp ON partition_keys  →  verdict column
+    (src_fp ∪ dest_fp) GROUP BY partition_keys  →  per-side columns, verdict
 
 Both fingerprint tables have one row per partition (tiny — thousands of
-rows even at 100 TB), so the join is broadcast and costs nothing; all the
-heavy lifting happened in the two grouped aggregations that produced them.
+rows even at 100 TB), and the union keeps each side's hash partitioning on
+the keys, so the verdict costs no shuffle of its own; all the heavy
+lifting happened in the two grouped aggregations that produced them.
 
 Verdicts (the C5 state machine, minus its known WaitGroup bug):
 - ``copy``          dest partition absent or empty (copy.go:262-266, :241-245)
@@ -45,7 +46,7 @@ def diff_partitions(
     cols: list[str] | None = None,
     check_hashes: bool = True,
 ) -> DataFrame:
-    """Classify every partition in one pass per side + one tiny join.
+    """Classify every partition in one pass per side + one tiny aggregation.
 
     ``check_hashes=False`` degrades the comparison to row counts only — the
     reference's ``check_hashes`` toggle (config/config.go:34, C6).
@@ -64,62 +65,44 @@ def classify_fingerprints(
     names: list[str],
     check_hashes: bool = True,
 ) -> DataFrame:
-    """The verdict join over two pre-aggregated (keys, rows, fingerprint)
-    tables — shared by the live diff and the offline manifest diff
-    (operators.manifest): one row per partition in, one verdict row out."""
-    spec = PartitionSpec.bare(*names)
-    s = src_fp.select(
-        *spec.names,
-        F.col("rows").alias("src_rows"),
-        F.col("fingerprint").alias("src_fingerprint"),
-    )
-    d = dest_fp.select(
-        *spec.names,
-        F.col("rows").alias("dest_rows"),
-        F.col("fingerprint").alias("dest_fingerprint"),
-    )
+    """The verdict aggregation over two pre-aggregated (keys, rows,
+    fingerprint) tables — shared by the live diff and the offline manifest
+    diff (operators.manifest): one row per partition in, one verdict row out.
 
-    # Both sides are one-row-per-partition (thousands of rows even at
-    # 100 TB). full_outer can't broadcast, so shuffle-hash-join hint both
-    # sides — avoids the sort of a SortMergeJoin on these tiny inputs.
-    # Null-safe key equality: a NULL partition value is a real partition
-    # (hive's __HIVE_DEFAULT_PARTITION__); standard join equality would
-    # split it into phantom copy+extra rows.
-    d_renamed = d.select(
-        *[F.col(n).alias(f"__d_{n}") for n in spec.names],
-        "dest_rows",
-        "dest_fingerprint",
+    Each side is tagged, the two are unioned, and one ``groupBy(keys)``
+    splits the rows and fingerprint back into per-side columns. No join:
+    the union keeps each side's ``hashpartitioning(keys)``, so the final
+    XOR aggregates feed the verdict aggregate without another shuffle (a
+    null-safe join re-shuffles both sides on ``coalesce(k, 0), isnull(k)``).
+    ``groupBy`` makes a NULL key one group — a NULL partition value is a real
+    partition (hive's ``__HIVE_DEFAULT_PARTITION__``), not a phantom
+    copy+extra pair. A side without the partition stays NULL."""
+    side = F.col("__src")
+    both = src_fp.select(*names, "rows", "fingerprint", F.lit(True).alias("__src")).unionByName(
+        dest_fp.select(*names, "rows", "fingerprint", F.lit(False).alias("__src"))
     )
-    cond = None
-    for n in spec.names:
-        c = F.col(n).eqNullSafe(F.col(f"__d_{n}"))
-        cond = c if cond is None else cond & c
+    src_rows, dest_rows = F.col("src_rows"), F.col("dest_rows")
     if check_hashes:
-        equal = F.col("src_fingerprint").eqNullSafe(F.col("dest_fingerprint")) & F.col(
-            "src_rows"
-        ).eqNullSafe(F.col("dest_rows"))
+        same_fp = F.col("src_fingerprint").eqNullSafe(F.col("dest_fingerprint"))
+        equal = same_fp & src_rows.eqNullSafe(dest_rows)
     else:
-        equal = F.col("src_rows").eqNullSafe(F.col("dest_rows"))
-
+        equal = src_rows.eqNullSafe(dest_rows)
     verdict = (
-        F.when(F.col("src_rows").isNull(), F.lit(Verdict.EXTRA.value))
-        .when(
-            F.col("dest_rows").isNull() | (F.col("dest_rows") == 0),
-            F.lit(Verdict.COPY.value),
-        )
+        F.when(src_rows.isNull(), F.lit(Verdict.EXTRA.value))
+        .when(dest_rows.isNull() | (dest_rows == 0), F.lit(Verdict.COPY.value))
         .when(equal, F.lit(Verdict.IDENTICAL.value))
         .otherwise(F.lit(Verdict.INCONSISTENT.value))
     )
-    # verdict rides in the join's projection: a trailing withColumn would
-    # be one more eager JVM re-analysis of the whole diff lineage per call
     return (
-        s.hint("shuffle_hash")
-        .join(d_renamed.hint("shuffle_hash"), cond, "full_outer")
+        both.groupBy(*names)
+        .agg(
+            F.sum(F.when(side, F.col("rows"))).alias("src_rows"),
+            F.bit_xor(F.when(side, F.col("fingerprint"))).alias("src_fingerprint"),
+            F.sum(F.when(~side, F.col("rows"))).alias("dest_rows"),
+            F.bit_xor(F.when(~side, F.col("fingerprint"))).alias("dest_fingerprint"),
+        )
         .select(
-            *[
-                F.coalesce(F.col(n), F.col(f"__d_{n}")).alias(n)
-                for n in spec.names
-            ],
+            *names,
             "src_rows",
             "src_fingerprint",
             "dest_rows",

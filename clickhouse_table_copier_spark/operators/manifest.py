@@ -9,7 +9,7 @@ reference's workflow: its ``--info`` output serialized and compared
 later, instead of recomputed per run.
 
 Manifests are plain parquet, so they travel over anything and classify
-with the SAME verdict join as the live path
+with the SAME verdict aggregation as the live path
 (``operators.diff.classify_fingerprints`` — one code path for both).
 """
 

@@ -38,7 +38,7 @@ dest-type casts it is written with (copy/copy.go:217-221) and the
 destination is hashed raw. The other direction diverges under any lossy
 cast — a just-repaired partition would re-hash 'inconsistent' on every
 run and sync would never converge. Destination partition columns are
-re-cast to the source's key types so the diff join keys align.
+re-cast to the source's key types so the diff groups both sides by one key.
 
 At scale: the data write shuffles nothing (read → filter partitions →
 write partitioned), and the key filter prunes the source scan when the

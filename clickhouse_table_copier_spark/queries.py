@@ -254,7 +254,8 @@ def q_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineitem (drop month 3 = missing partition; perturb quantities of
 # orderkeys divisible by 997 = inconsistent partitions), fingerprint all
 # partitions in one grouped agg per side with their own 64-bit hash, and
-# classify with a full-outer join. Fingerprints stay internal; the output
+# classify (the oracle with a full-outer join, the engine with one
+# aggregation over both sides). Fingerprints stay internal; the output
 # (counts + verdict) is engine-independent.
 # ---------------------------------------------------------------------------
 _DIFF_ORACLE = """

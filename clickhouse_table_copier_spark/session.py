@@ -63,6 +63,14 @@ def get_spark(
         # overwrite is the engine's DELETE+INSERT (SURVEY §2.7 D1+D2 fused).
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every Column function (F.col, F.lit, .cast, .alias, …)
+        # in a call-site capture: a stack walk, a failed ``import ipykernel``
+        # when IPython is installed, and a JVM call per Column built. Off, a
+        # resync's driver sends about a third of the py4j commands. What is
+        # lost is the Python file:line in the DataFrame query context of
+        # error messages. PySpark caches the flag per process on first read,
+        # so it is set here, before any Column exists.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "12g"))
         # 239 registered queries generate hundreds of codegen classes in
         # one JVM; the default 240m JIT code cache overflows late in a

@@ -165,7 +165,7 @@ def test_file_fingerprints(spark, tmp_path):
 
 def test_diff_handles_null_partition_values(spark):
     """A NULL partition value is one real partition on both sides, not a
-    phantom copy+extra pair (null-safe diff join)."""
+    phantom copy+extra pair (the diff groups NULL keys as one)."""
     from clickhouse_table_copier_spark.operators.diff import diff_partitions
     from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
 

@@ -46,10 +46,21 @@ def test_dimension_joins_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_diff_join_is_shuffle_hash_not_sort_merge(spark):
+def test_diff_is_one_aggregation(spark):
+    """The verdict is one aggregation over the union of the two sides'
+    fingerprint tables: one Exchange per side, no Join of any kind, and
+    each side's scan keeps its partial + final XOR aggregate around that
+    Exchange (the grouped partials are all that is shuffled)."""
     plan = _plan(spark, "partition_diff")
-    assert "ShuffledHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert plan.count("Exchange") == 2, plan
+    assert "Join" not in plan, plan
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        if "Exchange" in line:
+            final, partial = lines[i - 1], lines[i + 1]
+            assert "HashAggregate" in final and "bit_xor(__h" in final, plan
+            assert "partial_bit_xor(__h" not in final, plan
+            assert "HashAggregate" in partial and "partial_bit_xor(__h" in partial, plan
 
 
 def test_topk_uses_take_ordered(spark):
