@@ -58,17 +58,20 @@ def _run(mode: str, config_path: str, explain: bool = False) -> int:
                 f"rows={r['rows']} fingerprint={r['fingerprint']}"
             )
 
-    if explain:
-        # the working version of the reference's dead --debug flag
-        # (main.go:52, "doesnt work"): show the physical plan the engine
-        # actually executes for the diff report. A sync's own report is
-        # rebuilt from its collected rows, so its plan comes from the dry
-        # run of the same options, before anything is changed.
+    # --explain is the working version of the reference's dead --debug flag
+    # (main.go:52, "doesnt work"): show the physical plan the engine
+    # actually executes for the diff report. An info run's report is that
+    # plan, uncollected. A sync's own report is rebuilt from its collected
+    # rows, so its plan comes from a dry run of the same options, built
+    # before anything is changed.
+    if explain and mode == "sync":
         dry = replace(options, dry_run=True)
         sync(spark, src, job.destination, spec, dry, semantic=job.semantic_casts).report.explain(
             "formatted"
         )
     result = sync(spark, src, job.destination, spec, options, semantic=job.semantic_casts)
+    if explain and mode == "info":
+        result.report.explain("formatted")
     # The reference's Info() prints one classification line per partition
     # (copy/copy.go:12-137); the report is that output. A sync has already
     # collected it; only a dry run's report is still to be computed.

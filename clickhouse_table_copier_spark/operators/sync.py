@@ -40,9 +40,12 @@ cast — a just-repaired partition would re-hash 'inconsistent' on every
 run and sync would never converge. Destination partition columns are
 re-cast to the source's key types so the diff groups both sides by one key.
 
-At scale: the data write shuffles nothing (read → filter partitions →
-write partitioned), and the key filter prunes the source scan when the
-source is itself partition-laid-out.
+At scale: the data write shuffles once. The rows to write are
+rebalanced by the partition keys (read → filter partitions → REBALANCE
+→ write partitioned), so each written partition gets one file, or a few
+of bounded size when adaptive execution splits a large one, instead of
+one file per task holding its rows. The key filter prunes the source
+scan when the source is itself partition-laid-out.
 """
 
 from __future__ import annotations
@@ -131,9 +134,16 @@ def _delete_partition_dirs(
 def _apply_parquet(
     spark: SparkSession, dest: TableRef, write: DataFrame, names: list[str], keys: dict
 ) -> list[tuple]:
-    """Parquet apply step; returns the keys whose partitions were deleted."""
+    """Parquet apply step; returns the keys whose partitions were deleted.
+
+    The rows are rebalanced by the partition keys before the partitioned
+    write, so each partition is written by one task, or by a few when
+    adaptive execution splits one above the advisory size. Without it
+    every write task opens a file in every partition it holds;
+    ``repartition`` gives one file per partition too, but never splits a
+    skewed one."""
     if keys["written"]:
-        writer = write.write.partitionBy(*names)
+        writer = write.hint("rebalance", *[F.col(n) for n in names]).write.partitionBy(*names)
         # skip_delete turns every replacement into an append; 'copied'
         # partitions are absent from dest, so one append covers them too
         if keys["appended"]:

@@ -310,12 +310,65 @@ def test_sync_job_counts(spark, tmp_path):
             return tracker.getJobIdsForGroup(group)
 
         tag = uuid.uuid4().hex
-        assert len(jobs(f"bootstrap-{tag}", src, parts)) <= 3
+        # 2 report + 2 write (the rebalance's map stage, then the write)
+        assert len(jobs(f"bootstrap-{tag}", src, parts)) <= 4
         resync = jobs(f"resync-{tag}", drifted, 1)
         listed = [j for j in resync if listing(j)]
-        # 1 schema + 3 classify + 1 write, beside the listing job
-        assert len(resync) - len(listed) <= 5 and len(listed) == (parts > 32)
+        # 1 schema + 3 classify + 2 write, beside the listing job
+        assert len(resync) - len(listed) <= 6 and len(listed) == (parts > 32)
         assert all(tracker.getStageInfo(s).numTasks <= cap for j in listed for s in tracker.getJobInfo(j).stageIds)
+
+
+def test_sync_writes_one_file_per_partition(spark, tmp_path):
+    """A parquet sync writes each partition it writes from one task, so
+    every written directory holds one data file however many input
+    partitions and write tasks the source has. Directories the sync does
+    not write keep their file."""
+    import shutil
+
+    key = F.when(F.col("id") % 6 == 0, None).otherwise(F.col("id") % 6)
+    src = spark.range(2000, numPartitions=8).select("id", key.alias("k"), (F.col("id") * 3).alias("v"))
+    dest = str(tmp_path / "dest")
+
+    def files() -> dict[str, list[str]]:
+        return {
+            d: sorted(f for f in os.listdir(os.path.join(dest, d)) if f.endswith(".parquet"))
+            for d in os.listdir(dest) if d.startswith("k=")
+        }
+
+    def check(written: set[str], before: dict) -> None:
+        after = files()
+        assert set(after) == {"k=__HIVE_DEFAULT_PARTITION__", *(f"k={i}" for i in range(1, 6))}
+        assert all(len(f) == 1 for f in after.values()), after
+        assert {d: f for d, f in after.items() if d not in written} == {
+            d: f for d, f in before.items() if d not in written
+        }
+        assert _fingerprints(spark.read.parquet(dest), key_type="bigint") == _fingerprints(src, key_type="bigint")
+
+    # 1. bootstrap
+    res = sync(spark, src, dest, SPEC)
+    assert res.copied_partitions == 6
+    check(set(files()), {})
+
+    # 2. resync: the NULL partition rewritten with mutated rows, k=1 missing
+    before = files()
+    null_dir, missing = "k=__HIVE_DEFAULT_PARTITION__", "k=1"
+    shutil.rmtree(os.path.join(dest, null_dir))
+    src.where(F.col("k").isNull()).drop("k").withColumn("v", F.col("v") + 1).coalesce(1).write.parquet(
+        os.path.join(dest, null_dir)
+    )
+    shutil.rmtree(os.path.join(dest, missing))
+    res = sync(spark, src, dest, SPEC)
+    assert _report(res)[None] == ("inconsistent", "overwritten") and _report(res)[1] == ("copy", "copied")
+    assert res.copied_partitions == 2
+    check({null_dir, missing}, before)
+
+    # 3. skip_delete appends a missing partition the same way
+    before = files()
+    shutil.rmtree(os.path.join(dest, "k=2"))
+    res = sync(spark, src, dest, SPEC, SyncOptions(skip_delete=True))
+    assert res.copied_partitions == 1
+    check({"k=2"}, before)
 
 
 def test_manifest_diff_handles_null_partition_values(spark, tmp_path):
@@ -362,10 +415,11 @@ def test_session_turns_off_call_site_capture(spark, monkeypatch):
     assert len(sent) <= 600, len(sent)
 
 
-def test_cli_sync_explain_prints_the_diff_plan(spark, tmp_path, monkeypatch, capsys):
-    """`cli sync --explain` prints the plan of the diff it runs, not the
-    scan of the report rows it collected."""
-    from clickhouse_table_copier_spark import cli
+def _explain_job(spark, tmp_path, monkeypatch) -> tuple[str, list]:
+    """A CLI job whose destination lacks one of two source partitions, and
+    the ``dry_run`` option of each call its run makes to
+    ``operators.sync.sync``."""
+    from clickhouse_table_copier_spark.operators import sync as sync_mod
 
     monkeypatch.setenv("SPARK_GRAFT_CPUS", spark.conf.get("spark.sql.shuffle.partitions"))
     rows = [(1, "a", 10), (2, "b", 20)]
@@ -379,10 +433,36 @@ def test_cli_sync_explain_prints_the_diff_plan(spark, tmp_path, monkeypatch, cap
         f"destination:\n  location: {tmp_path / 'dest'}\n"
         "partition_by:\n  - name: k\n    expr: k\n"
     )
-    assert cli.main(["sync", "--config", str(cfg), "--explain"]) == 0
+    calls, real = [], sync_mod.sync
+    monkeypatch.setattr(sync_mod, "sync", lambda *a, **kw: calls.append(a[4].dry_run) or real(*a, **kw))
+    return str(cfg), calls
+
+
+def test_cli_sync_explain_prints_the_diff_plan(spark, tmp_path, monkeypatch, capsys):
+    """`cli sync --explain` prints the plan of the diff it runs, not the
+    scan of the report rows it collected: a dry run builds that plan
+    before the run changes anything."""
+    from clickhouse_table_copier_spark import cli
+
+    cfg, calls = _explain_job(spark, tmp_path, monkeypatch)
+    assert cli.main(["sync", "--config", cfg, "--explain"]) == 0
     out = capsys.readouterr().out
     assert "HashAggregate" in out and "ExistingRDD" not in out, out
     assert "copied_partitions=1 " in out
+    assert calls == [True, False]
+
+
+def test_cli_info_explain_builds_the_report_once(spark, tmp_path, monkeypatch, capsys):
+    """`cli info --explain` prints the plan of the report its one dry run
+    returns, so the destination is probed, listed and diffed once."""
+    from clickhouse_table_copier_spark import cli
+
+    cfg, calls = _explain_job(spark, tmp_path, monkeypatch)
+    assert cli.main(["info", "--config", cfg, "--explain"]) == cli.EXIT_INCONSISTENT
+    out = capsys.readouterr().out
+    assert "HashAggregate" in out, out
+    assert "verdict=copy action=none" in out
+    assert calls == [True]
 
 
 def test_cli_sync_registers_called_clickhouse_functions(spark, tmp_path, monkeypatch):
