@@ -28,7 +28,7 @@ from enum import Enum
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clickhouse_table_copier_spark.operators.fingerprint import partition_fingerprints
+from clickhouse_table_copier_spark.operators.fingerprint import combine, partition_fingerprints
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
 
 
@@ -71,9 +71,10 @@ def classify_fingerprints(
 
     Each side is tagged, the two are unioned, and one ``groupBy(keys)``
     splits the rows and fingerprint back into per-side columns. No join:
-    the union keeps each side's ``hashpartitioning(keys)``, so the final
-    XOR aggregates feed the verdict aggregate without another shuffle (a
-    null-safe join re-shuffles both sides on ``coalesce(k, 0), isnull(k)``).
+    the union keeps each side's ``hashpartitioning(keys)``, so each side's
+    final fingerprint aggregate feeds the verdict aggregate without another
+    shuffle (a null-safe join re-shuffles both sides on ``coalesce(k, 0),
+    isnull(k)``); ``fingerprint.combine`` gives each side's columns.
     ``groupBy`` makes a NULL key one group — a NULL partition value is a real
     partition (hive's ``__HIVE_DEFAULT_PARTITION__``), not a phantom
     copy+extra pair. A side without the partition stays NULL."""
@@ -93,14 +94,13 @@ def classify_fingerprints(
         .when(equal, F.lit(Verdict.IDENTICAL.value))
         .otherwise(F.lit(Verdict.INCONSISTENT.value))
     )
+    per_side = []
+    for prefix, on in (("src", side), ("dest", ~side)):
+        rows, fingerprint = combine(F.when(on, F.col("rows")), F.when(on, F.col("fingerprint")))
+        per_side += [rows.alias(f"{prefix}_rows"), fingerprint.alias(f"{prefix}_fingerprint")]
     return (
         both.groupBy(*names)
-        .agg(
-            F.sum(F.when(side, F.col("rows"))).alias("src_rows"),
-            F.bit_xor(F.when(side, F.col("fingerprint"))).alias("src_fingerprint"),
-            F.sum(F.when(~side, F.col("rows"))).alias("dest_rows"),
-            F.bit_xor(F.when(~side, F.col("fingerprint"))).alias("dest_fingerprint"),
-        )
+        .agg(*per_side)
         .select(
             *names,
             "src_rows",

@@ -6,15 +6,17 @@ The reference's signature operator: per partition it computes
 partition per side, sequentially from a driver loop.
 
 The Spark-first formulation computes ALL partitions' fingerprints in one
-grouped aggregation per side:
+grouped aggregation per side, and this module is the only one that knows
+its algebra (the row hash, the per-group count and sum, :func:`combine`):
 
-    df.groupBy(partition_cols).agg(count(*), bit_xor(xxhash64(cols…)))
+    df.groupBy(partition_cols).agg(count(*), sum64(xxhash64(cols…)))
 
-XOR is commutative/associative, so the fingerprint is row-order- and
-partitioning-insensitive, and Spark executes it as a partial (map-side)
-XOR followed by a final XOR per key — no row ever crosses the network, only
-64-bit partials. At 100 TB this is a single scan with a tiny shuffle
-(#partitions × 16 bytes), versus the reference's O(#partitions) round trips.
+The fingerprint is the sum of the row hashes mod 2^64, not the reference's
+XOR, under which a row and its copy cancel (``{r, r}`` and ``{s, s}`` would
+match). A sum is order- and partitioning-insensitive and composes: the
+fingerprints of any split of the rows (files, partitions) combine into the
+whole's. Spark runs it as a partial (map-side) aggregate and a final one
+per key; only the partials cross the network (#partitions × 24 bytes).
 
 Hash-comparability contract (SURVEY §7.5): both sides must hash
 identically-ordered, identically-typed columns. Callers pass the aligned
@@ -25,20 +27,52 @@ match what the destination stores — mirroring how the reference hashes
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clickhouse_table_copier_spark.functions.scalars import row_hash
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
 
+# 1 was the XOR of row hashes; 2 is their sum mod 2^64. Stored fingerprints
+# (operators.manifest) carry it, so values of two algebras are never compared.
+VERSION = 2
+
+_LOW = 0xFFFFFFFF
+
+
+def _sum64(values: Column) -> Column:
+    """Aggregate: the sum of 64-bit ``values`` mod 2^64, NULL for none.
+    ANSI mode makes ``sum(bigint)`` raise on overflow, so the 32-bit halves
+    are summed apart (exact below 2^31 values) and folded by a shift, which
+    wraps, after the low half's carry is added to the high sum."""
+    low = F.sum(values.bitwiseAND(F.lit(_LOW)))
+    high = F.sum(F.shiftrightunsigned(values, 32))
+    return F.shiftleft(high + F.shiftright(low, 32), 32).bitwiseOR(low.bitwiseAND(F.lit(_LOW)))
+
+
+def combine(rows: Column, fingerprint: Column) -> tuple[Column, Column]:
+    """Aggregates folding (rows, fingerprint) partials into the (rows,
+    fingerprint) of their union: per-file values into a partition's,
+    per-partition values into a table's. NULL inputs are skipped, and a
+    group of only NULLs stays NULL."""
+    return F.sum(rows), _sum64(fingerprint)
+
+
+def _fingerprint(df: DataFrame, keys: list[Column | str], names: list[str], cols: list[str]) -> DataFrame:
+    """(names…, rows, fingerprint): ``keys`` selected as ``names``, one
+    group per distinct key, and the hash of ``cols`` per row."""
+    # one select, not withColumn: every Dataset transformation eagerly
+    # re-analyzes the plan JVM-side (~25 ms each on the growing diff lineage)
+    return (
+        df.select(*keys, row_hash(*cols).alias("__h"))
+        .groupBy(*names)
+        .agg(F.count(F.lit(1)).alias("rows"), _sum64(F.col("__h")).alias("fingerprint"))
+    )
+
 
 def table_fingerprint(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """A3 over the whole table: one row, columns (rows, fingerprint)."""
-    cols = cols or df.columns
-    return df.select(row_hash(*cols).alias("h")).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.bit_xor("h").alias("fingerprint"),
-    )
+    return _fingerprint(df, [], [], cols or df.columns)
 
 
 def file_fingerprints(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -48,20 +82,11 @@ def file_fingerprints(df: DataFrame, cols: list[str] | None = None) -> DataFrame
 
     File-granular fingerprints let a sync skip at file level even when the
     logical partition is coarse — useful when partitions are huge and
-    files are the real unit of re-copy.
+    files are the real unit of re-copy. :func:`combine` folds them into
+    the partition's or the table's fingerprint.
     """
-    cols = cols or df.columns
-    return (
-        df.select(
-            F.col("_metadata.file_path").alias("file_path"),
-            row_hash(*cols).alias("__h"),
-        )
-        .groupBy("file_path")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.bit_xor("__h").alias("fingerprint"),
-        )
-    )
+    path = F.col("_metadata.file_path").alias("file_path")
+    return _fingerprint(df, [path], ["file_path"], cols or df.columns)
 
 
 def partition_fingerprints(
@@ -74,19 +99,6 @@ def partition_fingerprints(
     The set-oriented replacement for the reference's per-partition
     GetPartitionHashAsync loop (database.go:532-551, copy/copy.go:217-232).
     """
-    cols = cols or df.columns
     # a pre-existing __h would make the appended hash column ambiguous
-    # in the bit_xor below (select appends; the old withColumn replaced)
     assert "__h" not in df.columns, "input already has a __h column"
-    with_parts = spec.with_partition_columns(df)
-    # select, not withColumn: every Dataset transformation eagerly
-    # re-analyzes the plan JVM-side (~25 ms each on the growing diff
-    # lineage); one select keeps the per-call driver cost flat
-    return (
-        with_parts.select("*", row_hash(*cols).alias("__h"))
-        .groupBy(*spec.names)
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.bit_xor("__h").alias("fingerprint"),
-        )
-    )
+    return _fingerprint(spec.with_partition_columns(df), ["*"], list(spec.names), cols or df.columns)

@@ -9,8 +9,8 @@ hypertable, so the engine expresses the same result two ways:
   partial-aggregated map-side; at 100 TB this beats per-level passes by
   the number of levels.
 - incremental maintenance — the streaming module's
-  ``incremental_partition_stats``/``windowed_event_counts`` are the
-  availableNow refresh path for the same tables.
+  ``windowed_event_counts`` is the availableNow refresh path for the same
+  tables.
 
 Rollup rows carry a ``grain`` column ('hour'|'day'|'month'), bucket start
 timestamp, and the aggregates — the layout a serving layer range-scans.

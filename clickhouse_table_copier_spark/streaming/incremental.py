@@ -3,77 +3,26 @@
 The reference is batch-only (SURVEY §2.8): its incremental story is
 "re-run the tool; fingerprints skip clean partitions" (copy/copy.go:194-271).
 Structured Streaming gives the engine a stronger version of the same idea:
+each function here starts an ``availableNow`` query over a directory, which
+processes only files added since the last run, and returns the query
+handle; callers await termination.
 
-- :func:`incremental_partition_stats` — a ``availableNow`` file-source
-  stream over a table directory that maintains per-partition (rows,
-  fingerprint-xor) state in a checkpoint. Each run processes only files
-  added since the last run — the reference's "only touch changed
-  partitions", enforced by the source instead of by fingerprint compare.
 - :func:`windowed_event_counts` — watermarked sliding-window counts over
   the events stream: the standard late-data-tolerant rollup a 100 TB
   event pipeline needs (event-time windows + watermark state eviction).
+- :func:`session_window_stats` — session windows per user.
+- :func:`incremental_warc_documents`, :func:`incremental_jsonl_documents`
+  — crawl and corpus ingest, one shard directory at a time.
 
-Both return the query handle; callers await termination. State size is
-O(partitions) / O(windows), never O(rows) — safe at scale.
+State size is O(windows) / O(sessions) / O(shards), never O(rows) — safe
+at scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from clickhouse_table_copier_spark.functions.scalars import row_hash
-
-
-def incremental_partition_stats(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    partition_expr: str,
-    partition_name: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    hash_cols: list[str] | None = None,
-):
-    """availableNow incremental maintenance of the partition-stats table.
-
-    Reads only files not yet recorded in the checkpoint, aggregates
-    (rows, bit_xor(xxhash64)) per partition for the NEW data, and appends
-    a micro-batch timestamped delta to ``output_dir``. Summing deltas per
-    partition (rows) / XORing fingerprints reconstructs the full stats —
-    XOR's self-inverse property is what makes the delta form lossless.
-    """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(source_dir)
-    )
-    cols = hash_cols or [f.name for f in schema.fields]
-    delta = (
-        stream.withColumn(partition_name, F.expr(partition_expr))
-        .withColumn("__h", row_hash(*cols))
-        .groupBy(partition_name)
-        .agg(
-            F.count(F.lit(1)).alias("rows_delta"),
-            F.bit_xor("__h").alias("fingerprint_delta"),
-        )
-    )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(output_dir)
-        )
-
-    return (
-        delta.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def session_window_stats(

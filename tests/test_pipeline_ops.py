@@ -112,7 +112,7 @@ def test_lsh_topk_recall_vs_brute_force(spark):
 
 
 def test_fingerprint_invariance_properties(spark):
-    """XOR fingerprint: invariant under row order + repartitioning,
+    """Fingerprint: invariant under row order + repartitioning,
     sensitive to any single-cell change (SURVEY §5.3)."""
     from clickhouse_table_copier_spark.operators.fingerprint import table_fingerprint
 
@@ -145,6 +145,7 @@ def test_exact_dedup_survivor_is_min_id(spark):
 
 def test_file_fingerprints(spark, tmp_path):
     from clickhouse_table_copier_spark.operators.fingerprint import (
+        combine,
         file_fingerprints,
         table_fingerprint,
     )
@@ -152,15 +153,13 @@ def test_file_fingerprints(spark, tmp_path):
     li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
     out = str(tmp_path / "multi")
     li.repartition(4).write.parquet(out)
-    per_file = file_fingerprints(spark.read.parquet(out)).collect()
-    assert len(per_file) == 4
-    assert sum(r["rows"] for r in per_file) == 6000
-    # XOR of per-file fingerprints == whole-table fingerprint (XOR assoc.)
-    combined = 0
-    for r in per_file:
-        combined ^= r["fingerprint"]
-    whole = table_fingerprint(spark.read.parquet(out)).collect()[0]["fingerprint"]
-    assert combined == whole
+    per_file = file_fingerprints(spark.read.parquet(out))
+    assert per_file.count() == 4
+    # the per-file values combine into the whole-table value
+    combined = per_file.agg(*combine(F.col("rows"), F.col("fingerprint"))).first()
+    whole = table_fingerprint(spark.read.parquet(out)).first()
+    assert combined[0] == whole["rows"] == 6000
+    assert combined[1] == whole["fingerprint"]
 
 
 def test_diff_handles_null_partition_values(spark):

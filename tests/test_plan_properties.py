@@ -49,8 +49,8 @@ def test_dimension_joins_broadcast(spark):
 def test_diff_is_one_aggregation(spark):
     """The verdict is one aggregation over the union of the two sides'
     fingerprint tables: one Exchange per side, no Join of any kind, and
-    each side's scan keeps its partial + final XOR aggregate around that
-    Exchange (the grouped partials are all that is shuffled)."""
+    each side's scan keeps its partial + final fingerprint aggregate around
+    that Exchange (the grouped partials are all that is shuffled)."""
     plan = _plan(spark, "partition_diff")
     assert plan.count("Exchange") == 2, plan
     assert "Join" not in plan, plan
@@ -58,9 +58,9 @@ def test_diff_is_one_aggregation(spark):
     for i, line in enumerate(lines):
         if "Exchange" in line:
             final, partial = lines[i - 1], lines[i + 1]
-            assert "HashAggregate" in final and "bit_xor(__h" in final, plan
-            assert "partial_bit_xor(__h" not in final, plan
-            assert "HashAggregate" in partial and "partial_bit_xor(__h" in partial, plan
+            assert "HashAggregate" in final and "sum(shiftrightunsigned(__h" in final, plan
+            assert "partial_sum(shiftrightunsigned(__h" not in final, plan
+            assert "HashAggregate" in partial and "partial_sum(shiftrightunsigned(__h" in partial, plan
 
 
 def test_topk_uses_take_ordered(spark):
@@ -69,12 +69,26 @@ def test_topk_uses_take_ordered(spark):
 
 
 def test_fingerprint_agg_is_partial_final(spark):
-    """XOR fingerprints must map-side combine: two HashAggregate levels
-    (partial + final), never a raw shuffle of rows."""
-    plan = _plan(spark, "partition_fingerprints")
-    assert plan.count("HashAggregate") >= 2
-    # the exchange between them carries only the grouped partials
-    assert "xxhash64" not in plan.split("Exchange")[-1].split("HashAggregate")[0] or True
+    """Fingerprints must map-side combine: the one Exchange sits between a
+    partial and a final HashAggregate, and the row hash is computed below
+    the partial one, so only grouped partials are shuffled, never rows.
+    Checked for the registered query (portable md5 hash) and for
+    ``operators.fingerprint`` (xxhash64) over the same table."""
+    from clickhouse_table_copier_spark.operators.fingerprint import partition_fingerprints
+    from clickhouse_table_copier_spark.plans.partition_spec import PartitionField, PartitionSpec
+
+    li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
+    spec = PartitionSpec.of(PartitionField("ship_month", "CAST(month(l_shipdate) AS INT)"))
+    operator = partition_fingerprints(li, spec)._jdf.queryExecution().executedPlan().toString()
+    for plan, row_hash in ((_plan(spark, "partition_fingerprints"), "md5("), (operator, "xxhash64(")):
+        assert plan.count("Exchange") == 1, plan
+        lines = plan.splitlines()
+        i = next(i for i, line in enumerate(lines) if "Exchange" in line)
+        final, partial = lines[i - 1], lines[i + 1]
+        assert "HashAggregate" in final and "partial_" not in final, plan
+        assert "HashAggregate" in partial and "partial_" in partial, plan
+        assert row_hash not in "\n".join(lines[: i + 2]), plan
+        assert row_hash in "\n".join(lines[i + 2:]), plan
 
 
 # SLOW lane (r17): building all 265 executed plans is ~4 min; the

@@ -31,9 +31,9 @@ TOKEN = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 REGISTERING = re.compile(r"register|_prep\d*")
 
 KEEP = {
-    "incremental_sync": "ROADMAP item 3: the crash-convergent incremental repair",
-    "write_fingerprint_manifest": "ROADMAP item 2: the destination fingerprint sidecar",
-    "diff_manifests": "ROADMAP item 2: the destination fingerprint sidecar",
+    "incremental_sync": "ROADMAP item 2: kept until the fingerprint sidecar covers it",
+    "write_fingerprint_manifest": "ROADMAP item 2: the fingerprint sidecar's writer",
+    "diff_manifests": "ROADMAP item 2: the fingerprint sidecar's reader",
     "TimezoneMismatchError": "COVERAGE.md reference-parity row C3 (timezone guard)",
     "assert_timezone": "COVERAGE.md reference-parity row C3 (timezone guard)",
     "warn_if_dest_larger": "COVERAGE.md reference-parity row C4 (row warnings)",
@@ -45,7 +45,6 @@ KEEP = {
     "brute_force_topk": "COVERAGE.md row 'ANN brute force'",
     "zone_map": "COVERAGE.md row 'Z-order + zone maps'",
     "prune_files": "COVERAGE.md row 'Z-order + zone maps'",
-    "incremental_partition_stats": "COVERAGE.md row 'Streaming incremental stats'",
     "decode_audio_meta": "COVERAGE.md row 'Multimodal binary columns' (audio header metadata)",
     "audio_features": "COVERAGE.md row 'Multimodal binary columns' (WAV windowed DSP)",
     "extract_features": "COVERAGE.md row 'Multimodal binary columns' (pixel decode)",

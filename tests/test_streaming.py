@@ -34,81 +34,6 @@ LINEITEM_SCHEMA = T.StructType(
 )
 
 
-def _latest_stats(spark, out_dir):
-    """Per-partition stats as of the latest batch: in ``complete`` mode
-    each batch rewrites full aggregates, so the max ``batch_id`` wins."""
-    deltas = spark.read.parquet(out_dir)
-    latest = deltas.groupBy("ship_month").agg(F.max("batch_id").alias("batch_id"))
-    return deltas.join(latest, ["ship_month", "batch_id"]).select(
-        "ship_month",
-        F.col("rows_delta").alias("rows"),
-        F.col("fingerprint_delta").alias("fingerprint"),
-    )
-
-
-def test_incremental_stats_match_batch_and_resume(spark, tmp_path):
-    from clickhouse_table_copier_spark.streaming.incremental import (
-        incremental_partition_stats,
-    )
-
-    src_dir = str(tmp_path / "src")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-    first = li.where(F.month("l_shipdate") <= 6)
-    first.write.mode("append").parquet(src_dir)
-
-    q = incremental_partition_stats(
-        spark, src_dir, LINEITEM_SCHEMA,
-        "CAST(month(l_shipdate) AS INT)", "ship_month",
-        out_dir, ck_dir,
-    )
-    q.awaitTermination()
-
-    got1 = {
-        r["ship_month"]: r["rows"]
-        for r in _latest_stats(spark, out_dir).collect()
-    }
-    want1 = {
-        r["ship_month"]: r["cnt"]
-        for r in first.groupBy(
-            F.expr("CAST(month(l_shipdate) AS INT)").alias("ship_month")
-        ).agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    assert got1 == want1
-
-    # second run: only the NEW files are processed (checkpoint-driven)
-    second = li.where(F.month("l_shipdate") > 6)
-    second.write.mode("append").parquet(src_dir)
-    q2 = incremental_partition_stats(
-        spark, src_dir, LINEITEM_SCHEMA,
-        "CAST(month(l_shipdate) AS INT)", "ship_month",
-        out_dir, ck_dir,
-    )
-    q2.awaitTermination()
-
-    merged = _latest_stats(spark, out_dir)
-    got2 = {r["ship_month"]: (r["rows"], r["fingerprint"]) for r in merged.collect()}
-    # batch truth over the whole directory
-    from clickhouse_table_copier_spark.operators.fingerprint import (
-        partition_fingerprints,
-    )
-    from clickhouse_table_copier_spark.plans.partition_spec import (
-        PartitionField,
-        PartitionSpec,
-    )
-
-    spec = PartitionSpec.of(PartitionField("ship_month", "CAST(month(l_shipdate) AS INT)"))
-    batch = {
-        r["ship_month"]: (r["rows"], r["fingerprint"])
-        for r in partition_fingerprints(
-            spark.read.parquet(src_dir), spec
-        ).collect()
-    }
-    assert got2 == batch
-
-
 def test_windowed_event_counts_match_batch(spark, tmp_path):
     from clickhouse_table_copier_spark.queries import _events
     from clickhouse_table_copier_spark.streaming.incremental import (

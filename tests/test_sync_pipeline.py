@@ -187,6 +187,43 @@ def test_pipeline_steps(spark, dest):
     assert fp(load_table(spark, dest)) == {**src_fp, **extra_fp}
 
 
+@pytest.mark.parametrize("kind", ["parquet", "jdbc"])
+def test_duplicate_rows_do_not_cancel(spark, tmp_path, kind):
+    """Rows that come in pairs do not cancel out of a fingerprint. Key
+    ``a`` holds ``{r, r}`` against ``{s, s}``, key ``b`` holds
+    ``{r, r, s}`` against ``{s, t, t}``: equal row counts and equal XORs
+    of the row hashes, different rows. The sync repairs both partitions,
+    and the next run finds them identical."""
+    dest, (_, a, b, _), key_type, _ = _dest(kind, tmp_path)
+    schema = f"id BIGINT, k {key_type}, v BIGINT"
+    src = spark.createDataFrame([(1, a, 10), (1, a, 10), (2, b, 20), (2, b, 20), (3, b, 30)], schema)
+    _replace(spark, dest, spark.createDataFrame(
+        [(1, a, 11), (1, a, 11), (3, b, 30), (4, b, 40), (4, b, 40)], schema
+    ))
+    rows = lambda df: sorted(tuple(r) for r in df.select("id", "k", "v").collect())  # noqa: E731
+
+    res = sync(spark, src, dest, SPEC)
+    assert _report(res) == {k: ("inconsistent", "overwritten") for k in (a, b)}
+    assert rows(load_table(spark, dest)) == rows(src)
+    res = sync(spark, src, dest, SPEC)
+    assert _report(res) == {k: ("identical", "none") for k in (a, b)}
+
+
+def test_combine_sums_fingerprints_mod_2_64(spark):
+    """``combine`` folds 64-bit values into their sum mod 2^64, read as a
+    signed ``bigint``: carries out of the low half and wraps past the top
+    bit are kept, and ANSI mode does not raise on them."""
+    from clickhouse_table_copier_spark.operators.fingerprint import combine
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    values = [2**63 - 1, -(2**63), -1, 0xFFFFFFFF, 1, 2**63 - 1, -(2**63) + 5, 0x80000000]
+    df = spark.createDataFrame([(1, v) for v in values], "rows BIGINT, fingerprint BIGINT")
+    total = sum(values) % 2**64
+    assert tuple(df.agg(*combine(F.col("rows"), F.col("fingerprint"))).first()) == (
+        len(values), total - 2**64 if total >= 2**63 else total,
+    )
+
+
 def _crash(*args, **kwargs):
     raise RuntimeError("injected")
 
@@ -387,6 +424,24 @@ def test_manifest_diff_handles_null_partition_values(spark, tmp_path):
     rows = diff_manifests(spark, sm, dm, ["k"]).collect()
     assert len(rows) == 2
     assert {r["k"]: r["verdict"] for r in rows} == {None: "identical", "a": "inconsistent"}
+
+
+def test_manifest_of_another_fingerprint_version_is_refused(spark, tmp_path):
+    """A manifest without this fingerprint version, such as one holding the
+    XOR fingerprints written before manifests carried a version, is
+    refused, not compared."""
+    from clickhouse_table_copier_spark.operators.manifest import (
+        diff_manifests,
+        write_fingerprint_manifest,
+    )
+
+    df = spark.createDataFrame([("a", 1)], "k STRING, v INT")
+    current, old = str(tmp_path / "current"), str(tmp_path / "old")
+    write_fingerprint_manifest(df, SPEC, current, ["v"])
+    spark.read.parquet(current).drop("fingerprint_version").write.parquet(old)
+    assert [r["verdict"] for r in diff_manifests(spark, current, current, ["k"]).collect()] == ["identical"]
+    with pytest.raises(ValueError, match="fingerprint version"):
+        diff_manifests(spark, current, old, ["k"])
 
 
 def test_session_turns_off_call_site_capture(spark, monkeypatch):
