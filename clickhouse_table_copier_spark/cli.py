@@ -28,13 +28,18 @@ EXIT_INCONSISTENT = 2
 
 
 def _run(mode: str, config_path: str, explain: bool = False) -> int:
+    from pyspark.sql import SparkSession
+
     from clickhouse_table_copier_spark.operators.sync import sync
     from clickhouse_table_copier_spark.session import get_spark
     from clickhouse_table_copier_spark.sources.table import load_table
 
     job = read_config(config_path)
     spec = job.spec
-    spark = get_spark(app_name=f"ctc-spark-{mode}")
+    # In-process callers keep their session as they built it: getOrCreate
+    # would re-apply get_spark's defaults (shuffle partitions, listing
+    # parallelism) to it.
+    spark = SparkSession.getActiveSession() or get_spark(app_name=f"ctc-spark-{mode}")
 
     # ClickHouse dialect in-session: a reference config's partition_by
     # expressions (toYYYYMM(date), intDiv(key, N), …) evaluate verbatim.

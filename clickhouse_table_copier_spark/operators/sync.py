@@ -44,8 +44,11 @@ At scale: the data write shuffles once. The rows to write are
 rebalanced by the partition keys (read → filter partitions → REBALANCE
 → write partitioned), so each written partition gets one file, or a few
 of bounded size when adaptive execution splits a large one, instead of
-one file per task holding its rows. The key filter prunes the source
-scan when the source is itself partition-laid-out.
+one file per task holding its rows. The files are zstd-compressed, set
+on that one writer (the reference's MergeTree parts are stored
+compressed too); the session's codec, which every other parquet write
+uses, is left alone. The key filter prunes the source scan when the
+source is itself partition-laid-out.
 """
 
 from __future__ import annotations
@@ -141,9 +144,25 @@ def _apply_parquet(
     adaptive execution splits one above the advisory size. Without it
     every write task opens a file in every partition it holds;
     ``repartition`` gives one file per partition too, but never splits a
-    skewed one."""
+    skewed one.
+
+    Files are written with zstd, which stores lineitem-shaped data in
+    about a quarter fewer bytes than Spark's default snappy and costs no
+    more to read back when the next run fingerprints the destination.
+    The codec is an option of this writer, not a session default, so the
+    caller's other writes keep theirs; the destination's ``options`` come
+    after it (``compression: snappy`` for an old reader) and
+    ``partitionOverwriteMode`` last. It is given as ``parquet.compression``,
+    which Spark ranks below ``compression`` and above the session's codec,
+    so a destination naming its codec under either key gets it."""
     if keys["written"]:
-        writer = write.hint("rebalance", *[F.col(n) for n in names]).write.partitionBy(*names)
+        writer = (
+            write.hint("rebalance", *[F.col(n) for n in names])
+            .write.partitionBy(*names)
+            .option("parquet.compression", "zstd")
+        )
+        for k, v in dest.options.items():
+            writer = writer.option(k, str(v))
         # skip_delete turns every replacement into an append; 'copied'
         # partitions are absent from dest, so one append covers them too
         if keys["appended"]:

@@ -252,7 +252,8 @@ def q_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # J2 + C5 — the flagship: full partition diff with verdicts.
 # Both engines build the same deterministic "destination" mutation of
 # lineitem (drop month 3 = missing partition; perturb quantities of
-# orderkeys divisible by 997 = inconsistent partitions), fingerprint all
+# orderkeys divisible by 997 in months 1-6 = inconsistent partitions, so
+# months 7-12 stay identical), fingerprint all
 # partitions in one grouped agg per side with their own 64-bit hash, and
 # classify (the oracle with a full-outer join, the engine with one
 # aggregation over both sides). Fingerprints stay internal; the output
@@ -261,7 +262,8 @@ def q_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DIFF_ORACLE = """
 WITH dest AS (
   SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber,
-         CASE WHEN l_orderkey % 997 = 0 THEN l_quantity + 1 ELSE l_quantity END AS l_quantity,
+         CASE WHEN l_orderkey % 997 = 0 AND CAST(month(l_shipdate) AS INTEGER) <= 6
+              THEN l_quantity + 1 ELSE l_quantity END AS l_quantity,
          l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus, l_shipdate
   FROM lineitem WHERE CAST(month(l_shipdate) AS INTEGER) <> 3
 ),
@@ -295,7 +297,8 @@ def _mutated_dest(df: DataFrame) -> DataFrame:
     One select (same column order), not filter+withColumn: each Dataset
     transformation eagerly re-analyzes the plan JVM-side."""
     mutated = F.when(
-        F.col("l_orderkey") % 997 == 0, F.col("l_quantity") + 1
+        (F.col("l_orderkey") % 997 == 0) & F.expr("CAST(month(l_shipdate) AS INT) <= 6"),
+        F.col("l_quantity") + 1,
     ).otherwise(F.col("l_quantity"))
     return df.where(F.expr("CAST(month(l_shipdate) AS INT) <> 3")).select(
         *[

@@ -28,7 +28,11 @@ from pyspark.sql import types as T
 class TableRef:
     """A named table at a storage location.
 
-    ``fmt='parquet'``: ``location`` is a file/dir path.
+    ``fmt='parquet'``: ``location`` is a file/dir path. As a destination,
+    its ``options`` reach the writer, both ``write_table``'s and the sync's
+    apply step, where a codec named under ``compression`` or
+    ``parquet.compression`` overrides its zstd default
+    (``{"compression": "snappy"}`` for a reader without zstd).
     ``fmt='jdbc'``: ``location`` is a JDBC URL and ``table`` must be set;
     options carry credentials/driver plus the reader tuning below.
     (Parity seam for the reference's remote-server sources — the same plan

@@ -408,6 +408,62 @@ def test_sync_writes_one_file_per_partition(spark, tmp_path):
     check({"k=2"}, before)
 
 
+def _codecs(path: str) -> set[str]:
+    """The compression codecs of every column chunk in the data files
+    under ``path``, read from the parquet footers."""
+    import pyarrow.parquet as pq
+
+    out = set()
+    for root, _, names in os.walk(path):
+        for name in names:
+            if name.endswith(".parquet"):
+                md = pq.ParquetFile(os.path.join(root, name)).metadata
+                out |= {
+                    md.row_group(i).column(j).compression
+                    for i in range(md.num_row_groups) for j in range(md.num_columns)
+                }
+    return out
+
+
+@pytest.mark.parametrize("options,codec", [
+    ({}, "ZSTD"),
+    ({"compression": "snappy"}, "SNAPPY"),
+    ({"compression": "gzip"}, "GZIP"),
+    ({"parquet.compression": "snappy"}, "SNAPPY"),
+], ids=["default", "snappy", "gzip", "parquet.compression"])
+def test_sync_writes_zstd_unless_the_destination_sets_a_codec(spark, tmp_path, options, codec):
+    """A parquet sync writes zstd on the overwrite and the ``skip_delete``
+    append path, unless the destination's ``options`` name another
+    codec; the session's codec is left alone. Fingerprints do not depend
+    on the codec: partitions the sync did not touch stay ``identical``
+    next to one rewritten with the session's codec."""
+    import shutil
+
+    default = spark.conf.get("spark.sql.parquet.compression.codec")
+    src = spark.range(600, numPartitions=4).select("id", (F.col("id") % 3).alias("k"), (F.col("id") * 3).alias("v"))
+    dest = TableRef(location=str(tmp_path / "dest"), options=options)
+    part = lambda k: os.path.join(dest.location, f"k={k}")  # noqa: E731
+
+    # 1. bootstrap
+    assert sync(spark, src, dest, SPEC).copied_partitions == 3
+    assert _codecs(dest.location) == {codec}
+
+    # 2. skip_delete appends a missing partition
+    shutil.rmtree(part(2))
+    assert sync(spark, src, dest, SPEC, SyncOptions(skip_delete=True)).copied_partitions == 1
+    assert _codecs(dest.location) == {codec}
+
+    # 3. overwrite: k=0 rewritten by another writer, with mutated rows
+    shutil.rmtree(part(0))
+    src.where("k = 0").drop("k").withColumn("v", F.col("v") + 1).coalesce(1).write.parquet(part(0))
+    assert _codecs(part(0)) == {default.upper()}
+    res = sync(spark, src, dest, SPEC)
+    assert _report(res) == {0: ("inconsistent", "overwritten"), 1: ("identical", "none"), 2: ("identical", "none")}
+    assert _codecs(dest.location) == {codec}
+    assert _fingerprints(spark.read.parquet(dest.location), key_type="bigint") == _fingerprints(src, key_type="bigint")
+    assert spark.conf.get("spark.sql.parquet.compression.codec") == default
+
+
 def test_manifest_diff_handles_null_partition_values(spark, tmp_path):
     """The manifest diff, like the live one, gives a NULL partition value
     identical on both sides one ``identical`` row, not a copy+extra pair."""
@@ -522,11 +578,13 @@ def test_cli_info_explain_builds_the_report_once(spark, tmp_path, monkeypatch, c
 
 def test_cli_sync_registers_called_clickhouse_functions(spark, tmp_path, monkeypatch):
     """`cli sync` in-process with a ClickHouse partition expression: the
-    shim it calls is registered and the partitions are written."""
+    shim it calls is registered and the partitions are written. The run
+    uses the caller's session as it is, whatever ``SPARK_GRAFT_CPUS`` says."""
     from clickhouse_table_copier_spark import cli
 
-    # the CLI's get_spark reapplies its defaults to this session
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", spark.conf.get("spark.sql.shuffle.partitions"))
+    confs = ("spark.sql.shuffle.partitions", "spark.sql.sources.parallelPartitionDiscovery.parallelism")
+    before = [spark.conf.get(c) for c in confs]
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")  # not the fixture's 8
     days = [datetime.date(2026, 1, 15), datetime.date(2026, 2, 3), datetime.date(2026, 2, 4)]
     spark.createDataFrame(list(enumerate(days)), "id BIGINT, l_shipdate DATE").write.parquet(str(tmp_path / "src"))
     cfg = tmp_path / "job.yaml"
@@ -537,6 +595,7 @@ def test_cli_sync_registers_called_clickhouse_functions(spark, tmp_path, monkeyp
     )
     assert cli.main(["sync", "--config", str(cfg)]) == 0
     assert {d for d in os.listdir(tmp_path / "dest") if d.startswith("ym=")} == {"ym=202601", "ym=202602"}
+    assert [spark.conf.get(c) for c in confs] == before
 
 
 def test_incremental_sync_retries_an_unfinished_repair(spark, tmp_path, monkeypatch):
