@@ -72,12 +72,9 @@ def _field(item) -> PartitionField:
     if isinstance(item, str):
         return PartitionField(item, item)
     name = _require(item, "name", "partition_by[]")
-    return PartitionField(
-        name=name,
-        expr=item.get("expr") or name,  # defaults to the bare column
-        source_col=item.get("source_col"),
-        is_temporal=bool(item.get("is_temporal", False)),
-    )
+    # expr defaults to the bare column; source_col and is_temporal are read
+    # by no sync step, so like any other unknown key they are ignored
+    return PartitionField(name, item.get("expr") or name)
 
 
 def parse_job_spec(data: dict) -> JobSpec:

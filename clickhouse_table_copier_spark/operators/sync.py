@@ -40,28 +40,23 @@ cast — a just-repaired partition would re-hash 'inconsistent' on every
 run and sync would never converge. Destination partition columns are
 re-cast to the source's key types so the diff groups both sides by one key.
 
-At scale: the data write shuffles once. The rows to write are
-rebalanced by the partition keys (read → filter partitions → REBALANCE
-→ write partitioned), so each written partition gets one file, or a few
-of bounded size when adaptive execution splits a large one, instead of
-one file per task holding its rows. The files are zstd-compressed, set
-on that one writer (the reference's MergeTree parts are stored
-compressed too); the session's codec, which every other parquet write
-uses, is left alone. The key filter prunes the source scan when the
-source is itself partition-laid-out.
+At scale: the data write shuffles once (read → filter partitions →
+REBALANCE → write partitioned, see ``_apply_parquet``), and the key
+filter prunes the scan of a partition-laid-out source.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_table_copier_spark.operators import sync_jdbc
 from clickhouse_table_copier_spark.operators.diff import Verdict, diff_partitions
 from clickhouse_table_copier_spark.plans.casting import align, apply_semantic
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
+from clickhouse_table_copier_spark.plans.predicates import sql_literal
 from clickhouse_table_copier_spark.sources.catalog import table_exists
 from clickhouse_table_copier_spark.sources.table import TableRef, load_table
 
@@ -84,28 +79,28 @@ class SyncResult:
     rows: list[Row] | None = None  # the collected report; None on dry runs
 
 
-def _literal(value, dtype: str) -> Column:
-    # a TIMESTAMP_NTZ value is wall-clock time: pass it as text so neither
-    # Python's nor the session's time zone shifts it on the way in
-    if dtype == "timestamp_ntz" and value is not None:
-        value = value.isoformat(" ")
-    return F.lit(value).cast(dtype)
-
-
 def where_keys(df: DataFrame, names: list[str], keys: list[tuple]) -> DataFrame:
-    """Rows of ``df`` whose partition key (``names``) is one of ``keys``.
+    """Rows of ``df`` whose partition key (``names``) is one of ``keys``,
+    as one ``named_struct(…) IN (named_struct(…), …)`` text parsed once.
 
-    Each literal is cast to its key column's type, so values read back
-    from a collected report compare in the column's own type (a
-    ``TIMESTAMP_NTZ`` key comes back as a naive datetime, which ``F.lit``
-    alone would type as ``TIMESTAMP``). A NULL key part matches NULL."""
+    Each literal is cast to its key column's type; backslashes are
+    escaped, as Spark's parser reads them as escapes. A collected
+    ``timestamp`` is naive local time: it gets its UTC offset, so the
+    session time zone does not shift it; ``timestamp_ntz`` stays
+    wall-clock text. A NULL key part matches NULL."""
     types = dict(df.dtypes)
-    key = F.struct(*[F.col(n) for n in names])
-    return df.where(
-        key.isin(
-            [F.struct(*[_literal(v, types[n]).alias(n) for n, v in zip(names, k)]) for k in keys]
-        )
-    )
+    fields = [sql_literal(n, True) for n in names]
+
+    def struct(values) -> str:
+        return f"named_struct({', '.join(f'{f}, {v}' for f, v in zip(fields, values))})"
+
+    def cast(n: str, v) -> str:
+        v = v.astimezone() if types[n] == "timestamp" and v is not None else v
+        return f"CAST({sql_literal(v, True)} AS {types[n]})"
+
+    column = struct("`" + n.replace("`", "``") + "`" for n in names)
+    values = ", ".join(struct(cast(n, v) for n, v in zip(names, k)) for k in keys)
+    return df.where(F.expr(f"{column} IN ({values})" if keys else "false"))
 
 
 def _delete_partition_dirs(

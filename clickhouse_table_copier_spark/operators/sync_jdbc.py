@@ -15,24 +15,22 @@ The delete-then-insert window is visible to concurrent readers — exactly
 the reference's semantics, and why both verify with fingerprints on the
 next run rather than assuming atomicity.
 
-Also here: the WHERE rendering with per-dialect string escaping. The
-statement runner is ``sources.table.jdbc_execute``; whether the table
-exists is decided by ``sources.catalog.table_exists``.
+Also here: the WHERE rendering with per-dialect string escaping (each
+value through ``plans.predicates.sql_literal``). The statement runner is
+``sources.table.jdbc_execute``; whether the table exists is decided by
+``sources.catalog.table_exists``.
 """
 
 from __future__ import annotations
 
-import datetime
-from decimal import Decimal
-
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_table_copier_spark.plans.predicates import sql_literal
 from clickhouse_table_copier_spark.sources.table import TableRef, jdbc_execute, write_table
 
-# Dialects whose string literals treat backslash as an escape character by
-# default (ClickHouse — the reference's native target — and MySQL family).
-# Standard-conforming servers (Derby, Postgres, Oracle) must NOT get
-# doubled backslashes: there '\' is literal.
+# Dialects whose string literals read backslash as an escape by default
+# (ClickHouse, the reference's target, and MySQL). Standard servers (Derby,
+# Postgres, Oracle) must NOT get doubled backslashes: there '\' is literal.
 _BACKSLASH_ESCAPE_URL_PREFIXES = ("jdbc:clickhouse", "jdbc:ch:", "jdbc:mysql", "jdbc:mariadb")
 
 
@@ -50,29 +48,14 @@ def sql_equality_where(
     (``tmp = +1``) the same way plans.predicates does for Column form.
 
     ``backslash_escapes``: set for dialects (ClickHouse/MySQL) where ``\\``
-    escapes inside string literals — a key value ending in a backslash
-    would otherwise swallow the closing quote and mis-target the DELETE."""
-
-    def lit(v) -> str:
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, (int, float)):
-            return str(v)
-        if isinstance(v, Decimal):  # a plain numeric literal, never '1.50'
-            return format(v, "f")
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return f"'{v}'"
-        s = str(v)
-        if backslash_escapes:
-            s = s.replace("\\", "\\\\")
-        return "'" + s.replace("'", "''") + "'"
+    escapes inside string literals, or a key ending in one mis-targets the DELETE."""
 
     def one(row: tuple) -> str:
         # ANSI-quoted identifiers: Spark's JDBC writer creates columns as
         # quoted (case-sensitive) names, so the delete must address them
         # the same way or case-folding servers (Derby, Postgres) miss
         parts = [
-            f'"{n}" IS NULL' if v is None else f'"{n}" = {lit(v)}'
+            f'"{n}" IS NULL' if v is None else f'"{n}" = {sql_literal(v, backslash_escapes)}'
             for n, v in zip(names, row)
         ]
         return "(" + " AND ".join(parts) + ")"

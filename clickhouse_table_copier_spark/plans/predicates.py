@@ -13,18 +13,39 @@ sidefunctions.go:194-236``) builds WHERE text per partition:
 - a ``_part='…'`` virtual-column mode (``copy/copy.go:207-211``) — mapped to
   Spark's ``_metadata.file_path`` pseudo-column.
 
-Everything returns Column expressions, so Catalyst pushes them into the
-parquet/JDBC scan (partition pruning + predicate pushdown for free).
+The predicates are Columns, so Catalyst pushes them into the parquet/JDBC
+scan; ``sql_literal`` renders key values as text for sync's filter/DELETE.
 """
 
 from __future__ import annotations
 
+import math
+from decimal import Decimal
 from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionField, PartitionSpec
+
+
+def sql_literal(value, backslash_escapes: bool = False) -> str:
+    """A partition-key value as SQL literal text (GenerateWhere's values,
+    sidefunctions.go:194-236). Dates, datetimes, NaN and ±inf are quoted
+    text for the reader to cast. ``backslash_escapes`` is for readers in
+    which ``\\`` escapes inside string literals (Spark, ClickHouse, MySQL)."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, Decimal):  # a plain numeric literal, never '1.50'
+        return format(value, "f")
+    if isinstance(value, int) or (isinstance(value, float) and math.isfinite(value)):
+        return str(value)
+    s = str(value)
+    if backslash_escapes:
+        s = s.replace("\\", "\\\\")
+    return "'" + s.replace("'", "''") + "'"
 
 
 def equality_predicate(spec: PartitionSpec, values: list) -> Column:

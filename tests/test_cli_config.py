@@ -158,6 +158,14 @@ def test_cli_accepts_clickhouse_partition_exprs(tmp_path):
     assert any(d.startswith("ym=") for d in os.listdir(dest))
 
 
+def test_unread_partition_keys_are_ignored():
+    # source_col/is_temporal are read by no sync step: even a 'fasle' there
+    # parses to the same field as leaving them out
+    d = _spec_dict("x")
+    d["partition_by"][0].update(source_col="l_shipdate", is_temporal="fasle")
+    assert parse_job_spec(d).spec == parse_job_spec(_spec_dict("x")).spec
+
+
 # ---------------------------------------------------------------------------
 # MIGRATION.md on-ramp: every example config in examples/ must actually
 # run (or, for the remote-server example, fully parse into the documented

@@ -1,11 +1,12 @@
 """Hypothesis property tests for the cross-engine rendering seams.
 
-These target the two places the engine emits SQL TEXT consumed by another
-engine — the remote-delete WHERE renderer and the shared readable-size
-body — where a quoting/precision bug would corrupt a destination rather
-than fail a query. Values are generated adversarially (quotes, unicode,
-NULLs, negative/huge ints) and each example batch is verified against
-DuckDB executing the rendered text for real.
+These target the places the engine emits SQL TEXT — the partition-key
+filters (the remote DELETE's WHERE, run by DuckDB, and the parquet key
+filter, run by Spark) and the shared readable-size body — where a
+quoting/precision bug would corrupt a destination rather than fail a
+query. Values are generated adversarially (quotes, backslashes, unicode,
+NULLs, negative/huge ints) and each example batch is checked by a real
+engine executing the rendered text.
 """
 
 from __future__ import annotations
@@ -14,12 +15,15 @@ import duckdb
 from hypothesis import given, settings, strategies as st
 
 from clickhouse_table_copier_spark.functions.ch_dialect import readable_size_sql
+from clickhouse_table_copier_spark.operators.sync import where_keys
 from clickhouse_table_copier_spark.operators.sync_jdbc import sql_equality_where
 
-# strings with the characters that break naive renderers
+# strings with the characters that break naive renderers, quotes and
+# backslashes drawn often enough to meet in a few examples
 _key_str = st.text(
-    alphabet=st.characters(
-        codec="utf-8", exclude_characters="\x00", max_codepoint=0x2FF
+    alphabet=st.one_of(
+        st.sampled_from("'\\\"`"),
+        st.characters(codec="utf-8", exclude_characters="\x00", max_codepoint=0x2FF),
     ),
     min_size=0,
     max_size=12,
@@ -30,6 +34,16 @@ _tuple = st.tuples(
 )
 
 
+def _near_misses(tuples) -> set:
+    """The tuples plus near-miss neighbors: the next key, and the string
+    swapped for NULL (or NULL for the empty string)."""
+    population = set(tuples)
+    for k, m in tuples:
+        population.add((k + 1, m))
+        population.add((k, None if m is not None else ""))
+    return population
+
+
 @settings(max_examples=20, deadline=None)
 @given(st.lists(_tuple, min_size=1, max_size=8, unique=True))
 def test_sql_equality_where_selects_exactly_the_doomed_tuples(tuples):
@@ -38,12 +52,7 @@ def test_sql_equality_where_selects_exactly_the_doomed_tuples(tuples):
     delete), no fewer (unrepaired partitions)."""
     con = duckdb.connect()
     con.execute('CREATE TABLE t (k BIGINT, "m" VARCHAR)')
-    # population = the doomed tuples plus near-miss neighbors
-    population = set(tuples)
-    for k, m in list(tuples):
-        population.add((k + 1, m))
-        population.add((k, None if m is not None else ""))
-    for k, m in population:
+    for k, m in _near_misses(tuples):
         con.execute("INSERT INTO t VALUES (?, ?)", [k, m])
 
     where = sql_equality_where(["k", "m"], list(tuples))
@@ -53,6 +62,17 @@ def test_sql_equality_where_selects_exactly_the_doomed_tuples(tuples):
     }
     assert got == set(tuples)
     con.close()
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(_tuple, min_size=1, max_size=8, unique=True))
+def test_where_keys_selects_exactly_the_given_tuples(spark, tuples):
+    """The parquet path's key filter, the same literals as Spark SQL text,
+    keeps EXACTLY the partitions it was built for: a partition it misses
+    is reported written but is not, one it wrongly keeps is rewritten."""
+    df = spark.createDataFrame(list(_near_misses(tuples)), "k BIGINT, m STRING")
+    got = {tuple(r) for r in where_keys(df, ["k", "m"], list(tuples)).collect()}
+    assert got == set(tuples)
 
 
 @settings(max_examples=20, deadline=None)

@@ -5,8 +5,8 @@ Derby JDBC table: bootstrap, a resync over one mutated, one missing and
 one extra partition, the delete-only path and a dry run. The partition
 keys include NULL, and each destination runs once more per edge key type:
 ``date``, microsecond ``timestamp`` and ``decimal(10,2)`` keys, and on
-parquet string keys Spark escapes in directory names (``/ = % :``) or
-carries as they are (a space, non-ASCII text). After each step the destination's partition fingerprints
+parquet string keys Spark escapes in directory names (``/ = % : ' \\``)
+or carries as they are (a space, non-ASCII text). After each step the destination's partition fingerprints
 must equal the source's, and the report must say what changed on disk or
 in the table. A run that fails at a phase boundary (report collected,
 JDBC rows deleted, parquet directories about to be removed) is repaired
@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import time
 import uuid
 from dataclasses import replace
 from decimal import Decimal
@@ -39,11 +40,11 @@ SPEC = PartitionSpec.bare("k")
 # CLOB, which no comparable column type accepts, so string keys run on
 # parquet only.
 KEYS = {
-    "string": ("string", ("a/b", "x", "zz"), ("a%2Fb", "x", "zz")),
+    "string": ("string", ("a/b", "o'b", "zz"), ("a%2Fb", "o%27b", "zz")),
     "escapes": (
         "string",
-        ("k=1%:2", "naïve café 東京", "a b"),
-        ("k%3D1%25%3A2", "naïve café 東京", "a b"),
+        ("k=1%:2\\", "naïve café 東京", "a b"),
+        ("k%3D1%25%3A2%5C", "naïve café 東京", "a b"),
     ),
     "date": (
         "date",
@@ -316,6 +317,41 @@ def test_timestamp_ntz_key_resyncs(spark, tmp_path):
         assert {r["verdict"] for r in again.report.collect()} == {"identical"}
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_timestamp_keys_under_a_non_utc_process_zone(spark, tmp_path, monkeypatch):
+    """A collected ``timestamp`` key is naive time in the Python process's
+    zone, not the session's (UTC here). The key filter renders it with its
+    UTC offset, so the resync and the delete-only directory lookup still
+    find it; the directories are named by the UTC instants."""
+    ref, keys, key_type, _ = _dest("parquet-timestamp", tmp_path)
+    try:
+        with monkeypatch.context() as m:
+            m.setenv("TZ", "America/New_York")
+            time.tzset()
+            dirs = ("__HIVE_DEFAULT_PARTITION__",) + tuple(
+                k.astimezone(datetime.timezone.utc).strftime("%Y-%m-%d %H%%3A%M%%3A%S.%f")
+                for k in keys[1:]
+            )
+            assert dirs[1] == "2024-01-01 15%3A00%3A00.123456"
+            test_pipeline_steps(spark, (ref, keys, key_type, dirs))
+    finally:
+        time.tzset()
+
+
+@pytest.mark.parametrize("dtype", ["double", "float"])
+def test_where_keys_matches_non_finite_float_keys(spark, dtype):
+    """NaN and ±Infinity keys read back from a collected frame each select
+    their own row, as does NULL."""
+    from clickhouse_table_copier_spark.operators.sync import where_keys
+
+    values = [float("nan"), float("inf"), float("-inf"), 0.1, -2.5e-30, None]
+    df = spark.createDataFrame(list(enumerate(values)), f"i INT, x {dtype}")
+    rows = df.collect()
+    for r in rows:
+        assert [s["i"] for s in where_keys(df, ["x"], [(r["x"],)]).collect()] == [r["i"]]
+    assert where_keys(df, ["x"], [(r["x"],) for r in rows]).count() == len(rows)
+    assert where_keys(df, ["x"], []).count() == 0
 
 
 def test_sync_job_counts(spark, tmp_path):
